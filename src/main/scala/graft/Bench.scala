@@ -46,35 +46,8 @@ object Bench {
     // stdout between sbt [info] lines and eat into the driver's fixed-size
     // stdout tail window that must contain the final JSON line.
     spark.sparkContext.setLogLevel("ERROR")
-    // warmup: touch every table at the target SF, then run every query once
-    // at the smallest SF. Whole-stage codegen compiles (Janino) + JIT are
-    // per-query-shape one-time costs — identical at any scale — and would
-    // otherwise dominate the small/medium queries' measured time; the
-    // steady-state number is the engine-throughput quantity that projects
-    // to cluster scale.
-    try {
-      Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
-      // smallest sibling SF if present, else the target itself (slower
-      // warmup, same measured steady state)
-      val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
-      val warmSf = if (sibling.isDirectory) sibling.toString else sfDir
-      SparkEntry.queries.foreach { case (name, fn) =>
-        try fn(spark, warmSf).count()
-        catch { case t: Throwable =>
-          System.err.println(s"[bench] warmup $name failed: ${t.getMessage}") }
-      }
-      // setup-phase queries (sink writes, ANN index builds) memoize their
-      // one-time work per (JVM, sf dir): invoke them once at the TARGET SF
-      // now so the measured phase times the steady-state side
-      SparkEntry.setupQueries.foreach { name =>
-        SparkEntry.queries.get(name).foreach { fn =>
-          try fn(spark, sfDir).count()
-          catch { case t: Throwable =>
-            System.err.println(s"[bench] sink setup $name failed: ${t.getMessage}") }
-        }
-      }
-    } catch { case t: Throwable =>
-      System.err.println(s"[bench] warmup failed: ${t.getMessage}") }
+    val setupRows = warmup(spark, sfDir, "bench")
+    System.err.println(s"[bench] setup phase (${setupRows.size} rows): ${setupRows.mkString(", ")}")
     // drop warmup garbage (and let ContextCleaner drain its queue) before
     // the measured phase starts
     System.gc()
@@ -177,16 +150,18 @@ object Bench {
         Thread.sleep(150)
         val gc0 = gcMillis
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case t: Throwable =>
+        val ok = try { fn(spark, sfDir).count(); true } catch { case t: Throwable =>
           if (!failed) {
             errors += 1
             System.err.println(s"[bench] $name FAILED: ${t.getMessage}")
           }
           failed = true
+          false
         }
         val dt = (System.nanoTime() - t0) / 1e9
         gcInQuery += gcMillis - gc0
-        best = math.min(best, dt)
+        // only a successful rep is a reading
+        if (ok) best = math.min(best, dt)
         rep += 1
       }
       // a query that failed every rep must not leak Double.MaxValue into
@@ -231,10 +206,14 @@ object Bench {
           while (rep < 2) {
             System.gc(); Thread.sleep(150)
             val t0 = System.nanoTime()
-            try { SparkEntry.queries(n)(spark, dst).count() }
-            catch { case t: Throwable =>
+            // only a successful rep is a reading: a fast-failing rep must
+            // not pass as a panel time (a row that never succeeds keeps the
+            // 0.0 sentinel, as in the main suite)
+            try {
+              SparkEntry.queries(n)(spark, dst).count()
+              best = math.min(best, (System.nanoTime() - t0) / 1e9)
+            } catch { case t: Throwable =>
               System.err.println(s"[bench] panel $n FAILED: ${t.getMessage}") }
-            best = math.min(best, (System.nanoTime() - t0) / 1e9)
             rep += 1
           }
           s"panel10x_$n" -> (if (best == Double.MaxValue) 0.0 else best)
@@ -322,4 +301,45 @@ object Bench {
     spark.stop()
     if (errors > 0) sys.exit(1)
   }
+
+  /** Warm-up and setup phase shared by Bench and VarianceProbe: touch every
+    * table at the target SF, then run every query once at the smallest SF.
+    * Whole-stage codegen compiles (Janino) + JIT are per-query-shape
+    * one-time costs — identical at any scale — and would otherwise
+    * dominate the small/medium queries' measured time; the steady-state
+    * number is the engine-throughput quantity that projects to cluster
+    * scale.
+    *
+    * A row whose warm-up reached a setup artifact (a sink write, an index
+    * build, a staged stream source — see [[Artifacts]]) memoizes that work
+    * per (JVM, sf dir), so it runs once more at the TARGET SF before
+    * measuring: the measured phase then times the steady-state read/query
+    * side, matching production semantics (sinks are written once; ANN
+    * indexes are built offline). Verify runs single-invocation in a fresh
+    * JVM, so the correctness gate always exercises the full setup path
+    * too. Returns the setup rows, in run order. */
+  def warmup(spark: SparkSession, sfDir: String, tag: String): Seq[String] =
+    try {
+      Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
+      // smallest sibling SF if present, else the target itself (slower
+      // warmup, same measured steady state)
+      val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
+      val warmSf = if (sibling.isDirectory) sibling.toString else sfDir
+      val setupRows = SparkEntry.queries.toSeq.filter { case (name, fn) =>
+        Artifacts.touching {
+          try fn(spark, warmSf).count()
+          catch { case t: Throwable =>
+            System.err.println(s"[$tag] warmup $name failed: ${t.getMessage}") }
+        }.nonEmpty
+      }
+      setupRows.foreach { case (name, fn) =>
+        try fn(spark, sfDir).count()
+        catch { case t: Throwable =>
+          System.err.println(s"[$tag] setup $name failed: ${t.getMessage}") }
+      }
+      setupRows.map(_._1)
+    } catch { case t: Throwable =>
+      System.err.println(s"[$tag] warmup failed: ${t.getMessage}")
+      Seq.empty
+    }
 }

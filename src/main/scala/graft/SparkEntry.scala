@@ -33,57 +33,4 @@ object SparkEntry {
   def oracleSql: Map[String, String] =
     RelationalQueries.oracle ++ WindowQueries.oracle ++ TextQueries.oracle ++
       ExpressionQueries.oracle ++ FacadeQueries.oracle ++ StreamQueries.oracle
-
-  /** Queries whose first invocation at a given SF dir runs a one-time
-    * setup memoized per JVM — a sink write (q71/q74/s02) or an ANN index
-    * build (e06 k-means centroids, e08 PQ codebook). Bench invokes these
-    * once at the TARGET SF before the measured phase so the measured
-    * number times the steady-state read/query side, matching production
-    * semantics (sinks are written once; ANN indexes are built offline).
-    * Verify runs single-invocation in a fresh JVM, so the correctness
-    * gate always exercises the full setup path too. */
-  val setupQueries: Seq[String] =
-    Seq("q71_orc_roundtrip", "q74_csv_roundtrip", "q90_bucketed_join",
-      "q91_mv_rewrite", // summary-MV parquet write + MvRewrite registration
-      "q92_mv_navigate", // second (coarser) summary MV write + registration
-      "q104_mv_joinback", // per-custkey orders MV write + registration
-      "q105_mv_snowflake", // same MV, snowflake join-back
-      "q93_partitioned_scan", // one-time dt-partitioned events layout write
-      "q106_aqe_skew_join", // one-time skew-split execution → parquet
-      "d33_zorder_scan", // one-time Z-order layout write
-      "q95_compacted_scan", // fragmented-ingest write + one-time compaction
-      "s02_stream_ingest",
-      "s12_stream_availablenow", // one-time backlog write + catch-up drain
-      "s03_stream_dedup", // stages its two-copy events dir on first call
-      "e06_ivf_kmeans_recall", "e08_pq_recall",
-      "e10_ivfpq_recall", // coarse+PQ codebooks + cell-partitioned index
-      "e17_jl_recall", // one-time JL tier-1 reduced-vector index write
-      "d67_training_shards", // one-time shard export write per (JVM, sf)
-      "d72_append_shards", // one-time base export + append per (JVM, sf)
-      "e27_chunk_ivf_recall", // chunk codebook + cell-partitioned index
-      "e30_bm25_index_served", // one-time BM25 posting-index commit
-      "e31_hybrid_served", // shares the e27 + e30 serving artifacts
-      "e34_bm25_retract", // one-time build + tombstone retraction
-      "e35_hybrid_takedown", // shares e34's + the retracted IVF state
-      "e38_bm25_compacted", // one-time build + retraction + compaction
-      "e39_bm25_cached", // shares e30's index; one-time cache population
-      "e40_dense_cached", // shares e35's retracted state; cache population
-      "e41_bm25_cache_pruned", // two extends + cache churn + maintenance
-      "e42_bm25_segments_folded", // four extends with interleaved folds
-      "e43_dense_cache_pruned", // IVF build + takedown churn + maintenance
-      "s33_stream_lifecycle", // one-time interleaved ingest/takedown drain
-      "e33_probe_operating", // one-time eval-corpus IVF + posting indexes
-      "e25_tier_recall_curves", // shares e17/e08's memoized index/codebook
-      "s08_stream_mv", // one-time foreachBatch MV maintenance per (JVM, sf)
-      "s18_stream_mv_joinback", // one-time streamed-MV maintenance + registration
-      "s19_stream_quality_routing", // one-time streamed routing per (JVM, sf)
-      "s20_stream_incremental_dedup", // one-time streamed dedup ingestion
-      "s21_stream_domain_cap", // one-time streamed domain-capped ingestion
-      "s22_stream_decontam_gate", // one-time streamed decontamination gate
-      "s23_stream_signal_ingest", // one-time streamed signal-bundle ingestion
-      "s24_stream_datasheet", // one-time streamed datasheet maintenance
-      "s25_stream_chunk_index", // one-time streamed chunk-index ingestion
-      "s32_stream_cached_serving", // one-time streamed cache population
-      "s15_stream_sketch", // one-time foreachBatch sketch maintenance
-      "s17_stream_heavyhitters") // one-time foreachBatch freq-sketch state
 }

@@ -52,14 +52,27 @@ object Par {
           }
         }))
 
-  /** Run two independent materializations concurrently on [[ec]]. */
+  /** Run two independent materializations concurrently on [[ec]]. Returns
+    * or throws only after BOTH legs have finished, so a failed leg never
+    * leaves the other running unobserved (still holding its checkpoint).
+    * If both fail, the first leg's failure is thrown with the second's
+    * attached via `addSuppressed`. */
   def join2[A, B](a: => A, b: => B): (A, B) = {
+    import scala.concurrent.{Await, Future}
+    import scala.concurrent.duration.Duration
+    import scala.util.{Failure, Success}
     implicit val e: scala.concurrent.ExecutionContext = ec
-    val fa = scala.concurrent.Future(a)
-    val fb = scala.concurrent.Future(b)
-    (scala.concurrent.Await.result(fa,
-        scala.concurrent.duration.Duration.Inf),
-      scala.concurrent.Await.result(fb,
-        scala.concurrent.duration.Duration.Inf))
+    val fa = Future(a)
+    val fb = Future(b)
+    Await.ready(fa, Duration.Inf)
+    Await.ready(fb, Duration.Inf)
+    (fa.value.get, fb.value.get) match {
+      case (Success(x), Success(y)) => (x, y)
+      case (Failure(ea), Failure(eb)) =>
+        if (ea ne eb) ea.addSuppressed(eb)
+        throw ea
+      case (Failure(ea), _) => throw ea
+      case (_, Failure(eb)) => throw eb
+    }
   }
 }

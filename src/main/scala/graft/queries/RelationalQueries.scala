@@ -26,27 +26,16 @@ object RelationalQueries {
   private def davg(c: Column, scale: Int = 2): Column =
     (sum(c.cast(DecimalType(18, scale))).cast("double") / count(c))
 
-  /** One-time-per-JVM materialization for the sink-roundtrip rows (q71/q74):
-    * the write is setup, not the measured query — under Bench the warmup
-    * invocation writes and the measured invocations only read, so the bench
-    * number times the scan+agg. The per-JVM nonce keeps concurrent runs over
-    * the same data dir from colliding; a shutdown hook cleans up. */
-  private val runNonce = java.lang.Long.toHexString(System.nanoTime())
-  private val written = java.util.concurrent.ConcurrentHashMap.newKeySet[String]()
-  private[queries] def materialize(tag: String, d: String)(write: String => Unit): String = {
-    val tmp = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_${tag}_${runNonce}_${Integer.toHexString(d.hashCode)}").toString
-    if (written.add(tmp)) {
-      write(tmp)
-      sys.addShutdownHook {
-        def rm(f: java.io.File): Unit = {
-          Option(f.listFiles()).foreach(_.foreach(rm)); f.delete(); ()
-        }
-        rm(new java.io.File(tmp))
-      }
+  /** One-time write for the sink-roundtrip and layout rows (q71/q74/...):
+    * the write is setup, not the measured query — `write` fills a fresh
+    * scratch path once per (JVM, sf dir) through [[graft.Artifacts]], and
+    * later invocations only read, so the bench number times the scan+agg. */
+  private[queries] def materialize(tag: String, d: String)(write: String => Unit): String =
+    graft.Artifacts.once(s"relational_$tag", d) {
+      val p = graft.Artifacts.dir(tag).toString
+      write(p)
+      p
     }
-    tmp
-  }
 
   val defs: Map[String, Q] = Map(
     // --- Project (LogicalPlan.scala:119-125) ---------------------------
@@ -1641,23 +1630,23 @@ object RelationalQueries {
   )
 
   /** One-time bucketed+sorted table pair for q90 (setup phase). Table names
-    * carry the run nonce + sf-dir hash (same collision contract as
-    * [[materialize]]); the data lands under java.io.tmpdir via
-    * option("path") so nothing pollutes a warehouse dir, and the shared
-    * shutdown hook removes the files (the catalog entries live in the
-    * in-memory session catalog and die with the JVM). */
+    * carry the scratch dir's name, unique per (JVM, sf dir); the data lands
+    * in that [[graft.Artifacts]] dir via option("path") so nothing pollutes
+    * a warehouse dir, and the registry's shutdown hook removes the files
+    * (the catalog entries live in the in-memory session catalog and die
+    * with the JVM). */
   private def bucketedTables(s: SparkSession, d: String): (String, String) =
     synchronized {
-      val suffix = s"${runNonce}_${Integer.toHexString(d.hashCode)}"
-      val liTab = s"graft_bkt_li_$suffix"
-      val ordTab = s"graft_bkt_ord_$suffix"
+      // materialize() only reserves the scratch dir
+      val p = materialize("bkt", d)(_ => ())
+      val suffix = new java.io.File(p).getName
+      val liTab = s"${suffix}_li"
+      val ordTab = s"${suffix}_ord"
       // gate on the CATALOG, not a JVM memo: the entries live in the
       // in-memory session catalog, so a harness that re-creates the session
       // (test suites share one JVM) keeps the files but loses the tables —
       // rewrite then (bucket metadata only exists via saveAsTable).
-      // materialize() just reserves the tmp dir + shutdown cleanup.
       if (!s.catalog.tableExists(liTab) || !s.catalog.tableExists(ordTab)) {
-        val p = materialize("bkt", d)(_ => ())
         Tables.lineitem(s, d)
           .select(col("l_orderkey"), col("l_extendedprice"))
           .repartition(8, col("l_orderkey"))
@@ -1674,17 +1663,6 @@ object RelationalQueries {
       (liTab, ordTab)
     }
 
-  /** One-time lineitem summary MV for q91 (setup phase): written under
-    * [[materialize]]'s tmp-dir contract, then registered with
-    * [[graft.plans.MvRewrite]] so the optimizer serves matching roll-ups
-    * from it. Registration is per-(JVM, dir) but re-run against the CURRENT
-    * session on every call — registry entries survive a session swap, the
-    * `extraOptimizations` installation must follow the live session (same
-    * lesson as [[bucketedTables]]'s catalog gate). Decimal sum partials keep
-    * re-aggregation exact; the count partial rolls up via sum. */
-  /** Per-custkey orders roll-up for the q104 join-back rewrite: the MV
-    * keeps the JOIN KEY as a grouping column, which is what makes the
-    * fact⋈dim aggregate servable — partials join back to the dim. */
   /** The q106 planted-skew join, exposed so PlansSpec can execute it under
     * [[graft.operators.Skew.withSkewJoinSplit]] and assert the split fired
     * (`skew=true` on the SMJ). 80% of orders map to k=0; nation is the
@@ -1702,7 +1680,10 @@ object RelationalQueries {
     fact.join(dim, "k").select(col("o_orderkey"), col("k"), col("n_name"))
   }
 
-  private def ordersMv(s: SparkSession, d: String): Unit = synchronized {
+  /** Per-custkey orders roll-up for the q104 join-back rewrite: the MV
+    * keeps the JOIN KEY as a grouping column, which is what makes the
+    * fact⋈dim aggregate servable — partials join back to the dim. */
+  private def ordersMv(s: SparkSession, d: String): Unit = {
     def mvDef = Tables.orders(s, d)
       .groupBy(col("o_custkey"))
       .agg(
@@ -1719,7 +1700,15 @@ object RelationalQueries {
         "mv_max_ok" -> "max"))
   }
 
-  private def lineitemMv(s: SparkSession, d: String): Unit = synchronized {
+  /** One-time lineitem summary MV for q91 (setup phase): written once per
+    * (JVM, sf dir) by [[materialize]], then registered with
+    * [[graft.plans.MvRewrite]] so the optimizer serves matching roll-ups
+    * from it. Registration is per-(JVM, dir) but re-run against the CURRENT
+    * session on every call — registry entries survive a session swap, the
+    * `extraOptimizations` installation must follow the live session (same
+    * lesson as [[bucketedTables]]'s catalog gate). Decimal sum partials keep
+    * re-aggregation exact; the count partial rolls up via sum. */
+  private def lineitemMv(s: SparkSession, d: String): Unit = {
     def mvDef = Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"), col("l_linestatus"), col("l_quantity"))
       .agg(
@@ -1744,7 +1733,7 @@ object RelationalQueries {
     * navigation — same registration contract as [[lineitemMv]]. Its own
     * measure set deliberately omits min/max so q91's full measure list
     * could never be served from it even without the filter guard. */
-  private def lineitemMv2(s: SparkSession, d: String): Unit = synchronized {
+  private def lineitemMv2(s: SparkSession, d: String): Unit = {
     def mvDef = Tables.lineitem(s, d)
       .groupBy(col("l_returnflag"), col("l_linestatus"))
       .agg(

@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.operators.{Dedup, UrlCuration}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -26,43 +26,10 @@ object StreamQueries {
 
   private val runNonce = java.lang.Long.toHexString(System.nanoTime())
   private val seq = new java.util.concurrent.atomic.AtomicInteger(0)
-  private val staged = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // separate map for the s02 ingest layout: its builder calls stageEvents,
-  // and a ConcurrentHashMap mapping function must never touch the same map
-  // (nested computeIfAbsent on one map throws "Recursive update" when the
-  // keys share a bin)
-  private val ingested = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mvMaintained = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val mvJoinback = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val qualityRouted = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val streamDedup = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val streamDomcap = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val streamDecontam = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val signalIngested = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val datasheetMaintained = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val chunkIndexIngested = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val bm25Maintained = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val sketchMaintained = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val freqMaintained = new java.util.concurrent.ConcurrentHashMap[String, String]()
   // memory-sink temp views from prior drains: each holds a full result
   // copy in driver memory, so the next drain drops them before starting
   // (every caller consumes the returned frame within its own invocation)
   private val liveSinks = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-
-  private def tmpDir(tag: String, create: Boolean = true): java.io.File = {
-    val f = new java.io.File(System.getProperty("java.io.tmpdir"),
-      s"graft_stream_${tag}_${runNonce}_${seq.incrementAndGet()}")
-    // the sharded-layout dir must NOT pre-exist: upsertSharded's bootstrap
-    // branch keys on fs.exists(path)
-    if (create) f.mkdirs()
-    sys.addShutdownHook {
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      rm(f)
-    }
-    f
-  }
 
   /** Stage the events parquet into a listable directory (`copies` copies) —
     * the file source's input contract — memoized per (sf dir, copies).
@@ -71,8 +38,8 @@ object StreamQueries {
     * e.g. the ScaleSmoke tiles) — a naive Files.copy of a directory copies
     * only the empty dir entry and silently yields a zero-row stream. */
   private def stageEvents(d: String, copies: Int): String =
-    staged.computeIfAbsent(s"$d#$copies", { _ =>
-      val dir = tmpDir("src")
+    Artifacts.once(stagedEventsName(copies), d) {
+      val dir = Artifacts.dir("src")
       val src = java.nio.file.Paths.get(s"$d/events.parquet")
       val parts: Seq[java.nio.file.Path] =
         if (java.nio.file.Files.isDirectory(src)) {
@@ -86,12 +53,33 @@ object StreamQueries {
         java.nio.file.Files.copy(p, dir.toPath.resolve(s"events_${i}_$j.parquet"))
       }
       dir.toString
-    })
+    }
+
+  /** Writes `df` as ONE parquet file `name` into the stream source dir
+    * `srcDir`: with maxFilesPerTrigger = 1 each staged file is one
+    * micro-batch. `lastMod` (epoch ms), when given, pins the file's
+    * arrival order for the file source. */
+  private def stageFile(df: DataFrame, srcDir: java.io.File, name: String,
+      lastMod: Long = -1L): Unit = {
+    val tmp = Artifacts.dir("stage")
+    df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
+    val dest = new java.io.File(srcDir, name)
+    java.nio.file.Files.move(part.toPath, dest.toPath)
+    if (lastMod >= 0) dest.setLastModified(lastMod)
+    ()
+  }
+
+  private def stagedEventsName(copies: Int): String = s"stream_events_x$copies"
 
   /** Stage both events layouts (1-copy and the s03 2-copy dir) for a data
     * dir without running any query — lets harnesses (ScaleSmoke) keep the
     * one-time copy outside timed runs. */
   def prestage(d: String): Unit = { stageEvents(d, 1); stageEvents(d, 2); () }
+
+  /** The [[graft.Artifacts]] names [[prestage]] builds. */
+  private[graft] val stagedEventArtifacts: Set[String] =
+    Set(1, 2).map(stagedEventsName)
 
   /** Probe access to the staged streaming source (tools/StateProbe). */
   private[graft] def eventsStreamFor(s: SparkSession, d: String): DataFrame =
@@ -136,12 +124,7 @@ object StreamQueries {
   private def withStatePartitions[T](s: SparkSession, n: Int)(body: => T): T = {
     val key = "spark.sql.shuffle.partitions"
     val prev = s.conf.get(key)
-    // GRAFT_STATE_PARTITIONS overrides the per-row default for A/B
-    // measurement of the state-partition sizing decision (it cannot be
-    // changed after a checkpoint exists, so rows choose it up front)
-    val eff = sys.env.get("GRAFT_STATE_PARTITIONS")
-      .map(_.toInt).getOrElse(n)
-    s.conf.set(key, eff.toString)
+    s.conf.set(key, n.toString)
     try body finally s.conf.set(key, prev)
   }
 
@@ -174,22 +157,17 @@ object StreamQueries {
     * rebuild's) into idempotent per-batch dirs. Returns the index dir;
     * shared by s25 (dense retrieval gate) and s27 (hybrid serving). */
   private def streamedChunkIndexFor(s: SparkSession, d: String): String =
-    chunkIndexIngested.computeIfAbsent(d, { _ =>
+    Artifacts.once("stream_chunk_index", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
-      val srcDir = tmpDir("schunksrc")
-      def stage(df: DataFrame, name: String): Unit = {
-        val tmp = tmpDir("schunkw")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        java.nio.file.Files.move(part.toPath,
-          new java.io.File(srcDir, name).toPath); ()
-      }
-      stage(corpus.filter(pmod(col("doc_id"), lit(2)) === 0), "docs_0.parquet")
-      stage(corpus.filter(pmod(col("doc_id"), lit(2)) === 1), "docs_1.parquet")
-      val out = tmpDir("schunkout", create = false).toString
-      val ckpt = tmpDir("schunkckpt")
+      val srcDir = Artifacts.dir("schunksrc")
+      stageFile(corpus.filter(pmod(col("doc_id"), lit(2)) === 0),
+        srcDir, "docs_0.parquet")
+      stageFile(corpus.filter(pmod(col("doc_id"), lit(2)) === 1),
+        srcDir, "docs_1.parquet")
+      val out = s"${Artifacts.dir("schunkout")}/out"
+      val ckpt = Artifacts.dir("schunkckpt")
       val stream = s.readStream
         .schema(s.read.parquet(srcDir.toString).schema)
         .option("maxFilesPerTrigger", 1)
@@ -199,7 +177,7 @@ object StreamQueries {
         out, ckpt.toString)
       try q.processAllAvailable() finally q.stop()
       out
-    })
+    }
 
   /** The s26 streamed BM25 posting-index maintenance, memoized per
     * (JVM, sf dir): each micro-batch tokenizes only its own chunks and
@@ -211,7 +189,7 @@ object StreamQueries {
     * staged in monotone doc_id order (s20's crawl-snapshot staging).
     * Returns the committed state path; shared by s26 and s27. */
   private def streamedBm25StateFor(s: SparkSession, d: String): String =
-    bm25Maintained.computeIfAbsent(d, { _ =>
+    Artifacts.once("stream_bm25_state", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
@@ -219,21 +197,13 @@ object StreamQueries {
         .chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
       val cut = corpus.agg(max(col("doc_id"))).head.getLong(0) * 3 / 5
-      val srcDir = tmpDir("sbm25src")
-      def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-        val tmp = tmpDir("sbm25w")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(srcDir, name)
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(lastMod); ()
-      }
+      val srcDir = Artifacts.dir("sbm25src")
       val now = System.currentTimeMillis()
-      stage(chunks.filter(col("doc_id") <= cut), "snap_0.parquet",
+      stageFile(chunks.filter(col("doc_id") <= cut), srcDir, "snap_0.parquet",
         now - 60000)
-      stage(chunks.filter(col("doc_id") > cut), "snap_1.parquet", now)
-      val state = tmpDir("sbm25state", create = false).toString + "/state"
-      val ckpt = tmpDir("sbm25ckpt")
+      stageFile(chunks.filter(col("doc_id") > cut), srcDir, "snap_1.parquet", now)
+      val state = s"${Artifacts.dir("sbm25state")}/state"
+      val ckpt = Artifacts.dir("sbm25ckpt")
       val stream = s.readStream
         .schema(s.read.parquet(srcDir.toString).schema)
         .option("maxFilesPerTrigger", 1)
@@ -259,9 +229,8 @@ object StreamQueries {
         .start()
       try q.processAllAvailable() finally q.stop()
       state
-    })
+    }
 
-  private val scd2Maintained = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The s28 streamed SCD-2 maintenance, memoized per (JVM, sf dir):
     * events staged as two files split at the SAME (min+max)/2 micros
@@ -278,28 +247,21 @@ object StreamQueries {
     * batch's apply guards against the PRIOR version's markers. Returns
     * the committed state path; read the dimension via part `dim`. */
   private def streamedScd2StateFor(s: SparkSession, d: String): String =
-    scd2Maintained.computeIfAbsent(d, { _ =>
+    Artifacts.once("stream_scd2_state", d) {
       import graft.operators.{Dimension, IncrementalAgg}
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"),
         col("event_id"), col("event_type"))
       val mm = ev.agg(min(unix_micros(col("ts"))),
         max(unix_micros(col("ts")))).head
       val cut = (mm.getLong(0) + mm.getLong(1)) / 2
-      val srcDir = tmpDir("scd2src")
-      def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-        val tmp = tmpDir("scd2w")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(srcDir, name)
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(lastMod); ()
-      }
+      val srcDir = Artifacts.dir("scd2src")
       val now = System.currentTimeMillis()
-      stage(ev.filter(unix_micros(col("ts")) <= cut), "half_0.parquet",
+      stageFile(ev.filter(unix_micros(col("ts")) <= cut), srcDir, "half_0.parquet",
         now - 60000)
-      stage(ev.filter(unix_micros(col("ts")) > cut), "half_1.parquet", now)
-      val state = tmpDir("scd2state", create = false).toString + "/state"
-      val ckpt = tmpDir("scd2ckpt")
+      stageFile(ev.filter(unix_micros(col("ts")) > cut),
+        srcDir, "half_1.parquet", now)
+      val state = s"${Artifacts.dir("scd2state")}/state"
+      val ckpt = Artifacts.dir("scd2ckpt")
       val stream = s.readStream
         .schema(s.read.parquet(srcDir.toString).schema)
         .option("maxFilesPerTrigger", 1)
@@ -333,39 +295,27 @@ object StreamQueries {
         .start()
       try q.processAllAvailable() finally q.stop()
       state
-    })
+    }
 
-  private val retractMaintained = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val funnelStaged = new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** Events staged as TWO ts-monotone halves (split at the (min+max)/2
     * micros midpoint), memoized per (JVM, sf dir) — the arrival contract
     * the s30 funnel-anchor and s31 retention-bitmap folds require. */
   private def funnelStagedDirFor(s: SparkSession, d: String): String =
-    funnelStaged.computeIfAbsent(d, { _ =>
+    Artifacts.once("stream_funnel_source", d) {
       val ev = Tables.events(s, d).select(col("user_id"), col("ts"),
         col("event_id"), col("event_type"))
       val mm = ev.agg(min(unix_micros(col("ts"))),
         max(unix_micros(col("ts")))).head
       val cut = (mm.getLong(0) + mm.getLong(1)) / 2
-      val dir = tmpDir("sfunnelsrc")
-      def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-        val tmp = tmpDir("sfunnelw")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(dir, name)
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(lastMod); ()
-      }
+      val dir = Artifacts.dir("sfunnelsrc")
       val now = System.currentTimeMillis()
-      stage(ev.filter(unix_micros(col("ts")) <= cut), "half_0.parquet",
+      stageFile(ev.filter(unix_micros(col("ts")) <= cut), dir, "half_0.parquet",
         now - 60000)
-      stage(ev.filter(unix_micros(col("ts")) > cut), "half_1.parquet", now)
+      stageFile(ev.filter(unix_micros(col("ts")) > cut), dir, "half_1.parquet", now)
       dir.toString
-    })
+    }
 
-  private val cachedServeMaintained =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The s32 streamed CACHED serving, memoized per (JVM, sf dir): e30's
     * posting index built once offline, then query batches arrive as a
@@ -379,35 +329,27 @@ object StreamQueries {
     * output dir; the row reads batch 1 — the full query set served
     * THROUGH the cache. */
   private def streamedCachedServeFor(s: SparkSession, d: String): String =
-    cachedServeMaintained.computeIfAbsent(d, { _ =>
+    Artifacts.once("stream_cached_serve", d) {
       import graft.operators.{Bm25Index, Packing}
       val docs = Tables.documents(s, d)
       val corpus = docs.filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = Packing.chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val state = tmpDir("scsrvstate", create = false).toString + "/state"
+      val state = s"${Artifacts.dir("scsrvstate")}/state"
       Bm25Index.extendIndex(s, state, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
-      val cache = tmpDir("scsrvcache", create = false).toString + "/cache"
+      val cache = s"${Artifacts.dir("scsrvcache")}/cache"
       val queries = docs.filter(pmod(col("doc_id"), lit(101)) === 5)
         .select(col("doc_id"), col("text"))
       val cut = queries.agg(max(col("doc_id"))).head.getLong(0) / 2
-      val srcDir = tmpDir("scsrvsrc")
-      def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-        val tmp = tmpDir("scsrvw")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(srcDir, name)
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(lastMod); ()
-      }
+      val srcDir = Artifacts.dir("scsrvsrc")
       val now = System.currentTimeMillis()
-      stage(queries.filter(col("doc_id") <= cut), "qbatch_0.parquet",
+      stageFile(queries.filter(col("doc_id") <= cut), srcDir, "qbatch_0.parquet",
         now - 60000)
-      stage(queries, "qbatch_1.parquet", now)
-      val out = tmpDir("scsrvout").toString
-      val ckpt = tmpDir("scsrvckpt")
+      stageFile(queries, srcDir, "qbatch_1.parquet", now)
+      val out = Artifacts.dir("scsrvout").toString
+      val ckpt = Artifacts.dir("scsrvckpt")
       val stream = s.readStream
         .schema(s.read.parquet(srcDir.toString).schema)
         .option("maxFilesPerTrigger", 1)
@@ -431,7 +373,7 @@ object StreamQueries {
         .start()
       try q.processAllAvailable() finally q.stop()
       out
-    })
+    }
 
   /** The s29 streamed takedown, memoized per (JVM, sf dir): e34's posting
     * index built in full at batch 0, then the %13-block deletion requests
@@ -440,32 +382,25 @@ object StreamQueries {
     * retraction recomputes from the already-retracted state but the
     * version guard refuses the commit). Returns the state path. */
   private def streamedRetractStateFor(s: SparkSession, d: String): String =
-    retractMaintained.computeIfAbsent(d, { _ =>
+    Artifacts.once("stream_takedown_state", d) {
       import graft.operators.{Bm25Index, Packing}
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = Packing.chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val state = tmpDir("sretrstate", create = false).toString + "/state"
+      val state = s"${Artifacts.dir("sretrstate")}/state"
       Bm25Index.extendIndex(s, state, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
       val dels = corpus.filter(pmod(col("doc_id"), lit(13)) === 3)
         .select(col("doc_id"))
       val cut = dels.agg(max(col("doc_id"))).head.getLong(0) / 2
-      val srcDir = tmpDir("sretrsrc")
-      def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-        val tmp = tmpDir("sretrw")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(srcDir, name)
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(lastMod); ()
-      }
+      val srcDir = Artifacts.dir("sretrsrc")
       val now = System.currentTimeMillis()
-      stage(dels.filter(col("doc_id") <= cut), "del_0.parquet", now - 60000)
-      stage(dels.filter(col("doc_id") > cut), "del_1.parquet", now)
-      val ckpt = tmpDir("sretrckpt")
+      stageFile(dels.filter(col("doc_id") <= cut),
+        srcDir, "del_0.parquet", now - 60000)
+      stageFile(dels.filter(col("doc_id") > cut), srcDir, "del_1.parquet", now)
+      val ckpt = Artifacts.dir("sretrckpt")
       val stream = s.readStream
         .schema(s.read.parquet(srcDir.toString).schema)
         .option("maxFilesPerTrigger", 1)
@@ -497,10 +432,8 @@ object StreamQueries {
         .start()
       try q.processAllAvailable() finally q.stop()
       state
-    })
+    }
 
-  private val lifecycleMaintained =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The s33 FULL-LIFECYCLE stream, memoized per (JVM, sf dir): ingest
     * and takedown batches interleaved on ONE index state through one
@@ -515,7 +448,7 @@ object StreamQueries {
     * serve must equal the from-scratch recompute over
     * (all docs) − (%13 block): e34's oracle verbatim. */
   private def streamedLifecycleStateFor(s: SparkSession, d: String): String =
-    lifecycleMaintained.computeIfAbsent(d, { _ =>
+    Artifacts.once("stream_lifecycle_state", d) {
       import graft.operators.{Bm25Index, Packing}
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
@@ -531,22 +464,14 @@ object StreamQueries {
         .select(lit("del").as("op"), col("doc_id"),
           lit(null).cast("long").as("chunk_id"),
           lit(null).cast("string").as("chunk_text"))
-      val srcDir = tmpDir("slifesrc")
-      def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-        val tmp = tmpDir("slifew")
-        df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-        val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-        val dest = new java.io.File(srcDir, name)
-        java.nio.file.Files.move(part.toPath, dest.toPath)
-        dest.setLastModified(lastMod); ()
-      }
+      val srcDir = Artifacts.dir("slifesrc")
       val now = System.currentTimeMillis()
-      stage(adds(col("doc_id") <= cut), "b0_add.parquet", now - 180000)
-      stage(dels(col("doc_id") <= cut), "b1_del.parquet", now - 120000)
-      stage(adds(col("doc_id") > cut), "b2_add.parquet", now - 60000)
-      stage(dels(col("doc_id") > cut), "b3_del.parquet", now)
-      val state = tmpDir("slifestate", create = false).toString + "/state"
-      val ckpt = tmpDir("slifeckpt")
+      stageFile(adds(col("doc_id") <= cut), srcDir, "b0_add.parquet", now - 180000)
+      stageFile(dels(col("doc_id") <= cut), srcDir, "b1_del.parquet", now - 120000)
+      stageFile(adds(col("doc_id") > cut), srcDir, "b2_add.parquet", now - 60000)
+      stageFile(dels(col("doc_id") > cut), srcDir, "b3_del.parquet", now)
+      val state = s"${Artifacts.dir("slifestate")}/state"
+      val ckpt = Artifacts.dir("slifeckpt")
       val stream = s.readStream
         .schema(s.read.parquet(srcDir.toString).schema)
         .option("maxFilesPerTrigger", 1)
@@ -589,7 +514,7 @@ object StreamQueries {
         .start()
       try q.processAllAvailable() finally q.stop()
       state
-    })
+    }
 
   val defs: Map[String, Q] = Map(
     // --- s01: tumbling-window counts, streamed end to end. Complete output
@@ -614,19 +539,18 @@ object StreamQueries {
     "s02_stream_ingest" -> ((s, d) => {
       // the streamed ingest is one-time setup per (JVM, sf dir) — like the
       // q71/q74 sink writes — so repeat invocations time the layout read.
-      // Built via the dedicated `ingested` map: the builder stages events
-      // (the `staged` map), which must not happen inside a computeIfAbsent
-      // on `staged` itself.
-      val layout = ingested.computeIfAbsent(d, { _ =>
-        val out = tmpDir("ingest", create = false)
-        val ckpt = tmpDir("ckpt")
+      // The layout dir must NOT pre-exist: upsertSharded's bootstrap branch
+      // keys on fs.exists(path).
+      val layout = Artifacts.once("stream_sharded_ingest", d) {
+        val out = new java.io.File(Artifacts.dir("ingest"), "out")
+        val ckpt = Artifacts.dir("ckpt")
         val q = withStatePartitions(s, 8) { EventStreams.ingestSharded(
           eventsStream(s, d).select(col("event_id"), col("user_id"),
             col("event_type"), col("value")),
           out.toString, "event_id", 16, ckpt.toString) }
         try q.processAllAvailable() finally q.stop()
         out.toString
-      })
+      }
       graft.sources.Sinks.readSharded(s, layout)
         .groupBy(col("shard").cast("long").as("shard"))
         .agg(count(lit(1)).as("n_events"),
@@ -762,9 +686,9 @@ object StreamQueries {
     //     the replay hash-comparable. Setup is one-time per (JVM, sf) —
     //     repeat invocations time the state read, like s02. ------------------
     "s08_stream_mv" -> ((s, d) => {
-      val state = mvMaintained.computeIfAbsent(d, { _ =>
-        val path = tmpDir("mvstate", create = false).toString + "/state"
-        val ckpt = tmpDir("mvckpt")
+      val state = Artifacts.once("stream_mv_state", d) {
+        val path = s"${Artifacts.dir("mvstate")}/state"
+        val ckpt = Artifacts.dir("mvckpt")
         val q = withStatePartitions(s, 8) {
           EventStreams.aggMaintain(
             eventsStream(s, d).select(col("event_type"),
@@ -773,7 +697,7 @@ object StreamQueries {
         }
         try q.processAllAvailable() finally q.stop()
         path
-      })
+      }
       graft.operators.IncrementalAgg.readState(s, state)
         .select(col("event_type"), col("cnt"),
           col("vsum").cast("double").as("ticks_sum"),
@@ -813,24 +737,16 @@ object StreamQueries {
               Seq("o_custkey"), rollups)
           }
       }
-      val memo = mvJoinback.computeIfAbsent(d, { _ =>
-        val fact = tmpDir("mvfact")
+      val (factDir, statePath) = Artifacts.once("stream_mv_joinback", d) {
+        val fact = Artifacts.dir("mvfact")
         val orders = Tables.orders(s, d)
-        def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-          val tmp = tmpDir("mvfw")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-          val dest = new java.io.File(fact, name)
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(lastMod); ()
-        }
         val now = System.currentTimeMillis()
-        stage(orders.filter(pmod(col("o_orderkey"), lit(5)) =!= 0),
+        stageFile(orders.filter(pmod(col("o_orderkey"), lit(5)) =!= 0), fact,
           "orders_base.parquet", now - 60000)
-        stage(orders.filter(pmod(col("o_orderkey"), lit(5)) === 0),
+        stageFile(orders.filter(pmod(col("o_orderkey"), lit(5)) === 0), fact,
           "orders_delta.parquet", now)
-        val statePath = tmpDir("mvjbstate", create = false).toString + "/state"
-        val ckpt = tmpDir("mvjbckpt")
+        val statePath = s"${Artifacts.dir("mvjbstate")}/state"
+        val ckpt = Artifacts.dir("mvjbckpt")
         val factPath = fact.toString
         val stream = s.readStream
           .schema(s.read.parquet(factPath).schema)
@@ -844,9 +760,8 @@ object StreamQueries {
             onRefresh = _ => register(factPath, statePath))
         }
         try q.processAllAvailable() finally q.stop()
-        s"$factPath|$statePath"
-      })
-      val Array(factDir, statePath) = memo.split('|')
+        (factPath, statePath)
+      }
       // re-register on EVERY invocation: a registered MvDef binds a
       // relation to the session that registered it — a later session (the
       // shared test context is stopped and rebuilt mid-suite) must not
@@ -883,21 +798,16 @@ object StreamQueries {
         withF.withColumn("p",
           graft.operators.Classifier.logisticScore(featCols, w))
       }
-      val memo = qualityRouted.computeIfAbsent(d, { _ =>
-        val srcDir = tmpDir("qroutesrc")
+      val (keepDir, rejDir) = Artifacts.once("stream_quality_routing", d) {
+        val srcDir = Artifacts.dir("qroutesrc")
         val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        def stage(df: DataFrame, name: String): Unit = {
-          val tmp = tmpDir("qroutew")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(srcDir, name).toPath); ()
-        }
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 0), "docs_0.parquet")
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 1), "docs_1.parquet")
-        val keepDir = tmpDir("qroutekeep", create = false).toString
-        val rejDir = tmpDir("qroutere", create = false).toString
-        val ckpt = tmpDir("qrouteckpt")
+        stageFile(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+          srcDir, "docs_0.parquet")
+        stageFile(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
+          srcDir, "docs_1.parquet")
+        val keepDir = s"${Artifacts.dir("qroutekeep")}/out"
+        val rejDir = s"${Artifacts.dir("qroutere")}/out"
+        val ckpt = Artifacts.dir("qrouteckpt")
         val stream = s.readStream
           .schema(s.read.parquet(srcDir.toString).schema)
           .option("maxFilesPerTrigger", 1)
@@ -906,9 +816,8 @@ object StreamQueries {
           score(stream).select(col("doc_id"), col("p")),
           col("p") > 0.5, keepDir, rejDir, ckpt.toString)
         try q.processAllAvailable() finally q.stop()
-        s"$keepDir|$rejDir"
-      })
-      val Array(keepDir, rejDir) = memo.split('|')
+        (keepDir, rejDir)
+      }
       val streamedKeep = s.read.parquet(keepDir).select(col("doc_id"))
       val streamedRej = s.read.parquet(rejDir).select(col("doc_id"))
       val batchKeep = score(
@@ -941,25 +850,18 @@ object StreamQueries {
     //     same threshold), so the ORACLE IS d30's SQL verbatim. -------------
     "s20_stream_incremental_dedup" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      val outDir = streamDedup.computeIfAbsent(d, { _ =>
+      val outDir = Artifacts.once("stream_dedup_kept", d) {
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("text"), col("n_chars"))
         val cut = docs.agg(max(col("doc_id"))).head.getLong(0) * 3 / 5
-        val srcDir = tmpDir("sdedupsrc")
-        def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-          val tmp = tmpDir("sdedupw")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-          val dest = new java.io.File(srcDir, name)
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(lastMod); ()
-        }
+        val srcDir = Artifacts.dir("sdedupsrc")
         val now = System.currentTimeMillis()
-        stage(docs.filter(col("doc_id") <= cut), "snap_0.parquet", now - 60000)
-        stage(docs.filter(col("doc_id") > cut), "snap_1.parquet", now)
-        val statePath = tmpDir("sdedupstate", create = false).toString + "/state"
-        val out = tmpDir("sdedupout", create = false).toString
-        val ckpt = tmpDir("sdedupckpt")
+        stageFile(docs.filter(col("doc_id") <= cut),
+          srcDir, "snap_0.parquet", now - 60000)
+        stageFile(docs.filter(col("doc_id") > cut), srcDir, "snap_1.parquet", now)
+        val statePath = s"${Artifacts.dir("sdedupstate")}/state"
+        val out = s"${Artifacts.dir("sdedupout")}/out"
+        val ckpt = Artifacts.dir("sdedupckpt")
         val stream = s.readStream
           .schema(s.read.parquet(srcDir.toString).schema)
           .option("maxFilesPerTrigger", 1)
@@ -980,7 +882,7 @@ object StreamQueries {
           .start()
         try q.processAllAvailable() finally q.stop()
         out
-      })
+      }
       s.read.parquet(outDir)
         .select(col("doc_id"), col("n_chars"))
         .orderBy("doc_id")
@@ -996,25 +898,18 @@ object StreamQueries {
     //     batch-global ARRIVAL-ORDER cap (row_number per host by
     //     doc_id), which the oracle replays in SQL. ----------------------
     "s21_stream_domain_cap" -> ((s, d) => {
-      val outDir = streamDomcap.computeIfAbsent(d, { _ =>
+      val outDir = Artifacts.once("stream_domcap_kept", d) {
         val urls = graft.queries.TextQueries.syntheticUrls(
           Tables.documents(s, d))
         val cut = urls.agg(max(col("doc_id"))).head.getLong(0) * 3 / 5
-        val srcDir = tmpDir("sdomcapsrc")
-        def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-          val tmp = tmpDir("sdomcapw")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-          val dest = new java.io.File(srcDir, name)
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(lastMod); ()
-        }
+        val srcDir = Artifacts.dir("sdomcapsrc")
         val now = System.currentTimeMillis()
-        stage(urls.filter(col("doc_id") <= cut), "snap_0.parquet", now - 60000)
-        stage(urls.filter(col("doc_id") > cut), "snap_1.parquet", now)
-        val statePath = tmpDir("sdomcapstate", create = false).toString + "/state"
-        val out = tmpDir("sdomcapout", create = false).toString
-        val ckpt = tmpDir("sdomcapckpt")
+        stageFile(urls.filter(col("doc_id") <= cut),
+          srcDir, "snap_0.parquet", now - 60000)
+        stageFile(urls.filter(col("doc_id") > cut), srcDir, "snap_1.parquet", now)
+        val statePath = s"${Artifacts.dir("sdomcapstate")}/state"
+        val out = s"${Artifacts.dir("sdomcapout")}/out"
+        val ckpt = Artifacts.dir("sdomcapckpt")
         val stream = s.readStream
           .schema(s.read.parquet(srcDir.toString).schema)
           .option("maxFilesPerTrigger", 1)
@@ -1032,7 +927,7 @@ object StreamQueries {
           .start()
         try q.processAllAvailable() finally q.stop()
         out
-      })
+      }
       s.read.parquet(outDir)
         .select(col("host"), col("doc_id"))
         .orderBy("host", "doc_id")
@@ -1050,7 +945,7 @@ object StreamQueries {
     //     oracle replays the planting + scoring + threshold. -------------
     "s22_stream_decontam_gate" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      val keepDir = streamDecontam.computeIfAbsent(d, { _ =>
+      val keepDir = Artifacts.once("stream_decontam_kept", d) {
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("text"), col("n_chars"))
         val bench = docs.filter(pmod(col("doc_id"), lit(97)) === 3)
@@ -1066,21 +961,14 @@ object StreamQueries {
               .otherwise(col("text")).as("text"),
             col("n_chars"))
         val cut = docs.agg(max(col("doc_id"))).head.getLong(0) / 2
-        val srcDir = tmpDir("sdecontamsrc")
-        def stage(df: DataFrame, name: String, lastMod: Long): Unit = {
-          val tmp = tmpDir("sdecontamw")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-          val dest = new java.io.File(srcDir, name)
-          java.nio.file.Files.move(part.toPath, dest.toPath)
-          dest.setLastModified(lastMod); ()
-        }
+        val srcDir = Artifacts.dir("sdecontamsrc")
         val now = System.currentTimeMillis()
-        stage(corpus.filter(col("doc_id") <= cut), "snap_0.parquet", now - 60000)
-        stage(corpus.filter(col("doc_id") > cut), "snap_1.parquet", now)
-        val keep = tmpDir("sdecontamkeep", create = false).toString
-        val rej = tmpDir("sdecontamrej", create = false).toString
-        val ckpt = tmpDir("sdecontamckpt")
+        stageFile(corpus.filter(col("doc_id") <= cut),
+          srcDir, "snap_0.parquet", now - 60000)
+        stageFile(corpus.filter(col("doc_id") > cut), srcDir, "snap_1.parquet", now)
+        val keep = s"${Artifacts.dir("sdecontamkeep")}/out"
+        val rej = s"${Artifacts.dir("sdecontamrej")}/out"
+        val ckpt = Artifacts.dir("sdecontamckpt")
         val (benchSh, bloomBytes) = graft.operators.Contamination
           .prepBenchmark(bench, "text")
         val benchCk = benchSh.localCheckpoint()
@@ -1094,7 +982,7 @@ object StreamQueries {
           try q.processAllAvailable() finally q.stop()
         } finally Dedup.release(benchCk)
         keep
-      })
+      }
       s.read.parquet(keepDir)
         .select(col("doc_id"), col("n_chars"))
         .orderBy("doc_id")
@@ -1111,20 +999,15 @@ object StreamQueries {
     //     bundle of the full corpus — the ORACLE IS d63's SQL verbatim. ----
     "s23_stream_signal_ingest" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
-      val sigDir = signalIngested.computeIfAbsent(d, { _ =>
+      val sigDir = Artifacts.once("stream_signal_bundle", d) {
         val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
-        val srcDir = tmpDir("ssignalsrc")
-        def stage(df: DataFrame, name: String): Unit = {
-          val tmp = tmpDir("ssignalw")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(srcDir, name).toPath); ()
-        }
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 0), "docs_0.parquet")
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 1), "docs_1.parquet")
-        val out = tmpDir("ssignalout", create = false).toString
-        val ckpt = tmpDir("ssignalckpt")
+        val srcDir = Artifacts.dir("ssignalsrc")
+        stageFile(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+          srcDir, "docs_0.parquet")
+        stageFile(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
+          srcDir, "docs_1.parquet")
+        val out = s"${Artifacts.dir("ssignalout")}/out"
+        val ckpt = Artifacts.dir("ssignalckpt")
         val stream = s.readStream
           .schema(s.read.parquet(srcDir.toString).schema)
           .option("maxFilesPerTrigger", 1)
@@ -1134,7 +1017,7 @@ object StreamQueries {
           out, ckpt.toString)
         try q.processAllAvailable() finally q.stop()
         out
-      })
+      }
       s.read.parquet(sigDir).drop("batch").orderBy("doc_id")
     }),
 
@@ -1148,21 +1031,16 @@ object StreamQueries {
     "s24_stream_datasheet" -> ((s, d) => {
       val rollups = Map("n_docs" -> "sum", "n_tokens" -> "sum",
         "n_chars" -> "sum", "n_quality_kept" -> "sum", "q_sum_fp" -> "sum")
-      val statePath = datasheetMaintained.computeIfAbsent(d, { _ =>
+      val statePath = Artifacts.once("stream_datasheet_state", d) {
         val docs = Tables.documents(s, d)
           .select(col("doc_id"), col("source"), col("lang"), col("text"))
-        val srcDir = tmpDir("sdsheetsrc")
-        def stage(df: DataFrame, name: String): Unit = {
-          val tmp = tmpDir("sdsheetw")
-          df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-          val part = tmp.listFiles().find(_.getName.endsWith(".parquet")).get
-          java.nio.file.Files.move(part.toPath,
-            new java.io.File(srcDir, name).toPath); ()
-        }
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 0), "docs_0.parquet")
-        stage(docs.filter(pmod(col("doc_id"), lit(2)) === 1), "docs_1.parquet")
-        val state = tmpDir("sdsheetstate", create = false).toString + "/state"
-        val ckpt = tmpDir("sdsheetckpt")
+        val srcDir = Artifacts.dir("sdsheetsrc")
+        stageFile(docs.filter(pmod(col("doc_id"), lit(2)) === 0),
+          srcDir, "docs_0.parquet")
+        stageFile(docs.filter(pmod(col("doc_id"), lit(2)) === 1),
+          srcDir, "docs_1.parquet")
+        val state = s"${Artifacts.dir("sdsheetstate")}/state"
+        val ckpt = Artifacts.dir("sdsheetckpt")
         val stream = s.readStream
           .schema(s.read.parquet(srcDir.toString).schema)
           .option("maxFilesPerTrigger", 1)
@@ -1175,7 +1053,7 @@ object StreamQueries {
         }
         try q.processAllAvailable() finally q.stop()
         state
-      })
+      }
       // serve the FULL card (cells + ROLLUP margins + grouping flags)
       // from the maintained leaf-cell state alone — the oracle is d65's
       // complete rollup SQL, so a margin that fails to reconstruct from
@@ -1539,9 +1417,9 @@ object StreamQueries {
     "s15_stream_sketch" -> ((s, d) => {
       graft.functions.GraftFunctions.register(s)
       import graft.functions.GraftFunctions.kllQuantile
-      val state = sketchMaintained.computeIfAbsent(d, { _ =>
-        val path = tmpDir("skstate", create = false).toString + "/state"
-        val ckpt = tmpDir("skckpt")
+      val state = Artifacts.once("stream_sketch_state", d) {
+        val path = s"${Artifacts.dir("skstate")}/state"
+        val ckpt = Artifacts.dir("skckpt")
         val q = withStatePartitions(s, 8) {
           EventStreams.sketchMaintain(
             eventsStream(s, d).select(col("event_type"), col("value")),
@@ -1549,7 +1427,7 @@ object StreamQueries {
         }
         try q.processAllAvailable() finally q.stop()
         path
-      })
+      }
       // one gate definition shared with q101 — batch-built and
       // streaming-maintained sketches answer to the same contract
       ExpressionQueries.kllRankGate(s, d,
@@ -1581,16 +1459,16 @@ object StreamQueries {
             .select(lit("g").as("k"),
               explode(array_repeat(concat(lit("hot_"),
                 pmod(expr("event_id div 50"), lit(2))), 200)).as("term")))
-      val state = freqMaintained.computeIfAbsent(d, { _ =>
-        val path = tmpDir("fhstate", create = false).toString + "/state"
-        val ckpt = tmpDir("fhckpt")
+      val state = Artifacts.once("stream_freq_state", d) {
+        val path = s"${Artifacts.dir("fhstate")}/state"
+        val ckpt = Artifacts.dir("fhckpt")
         val q = withStatePartitions(s, 8) {
           EventStreams.freqMaintain(withPlants(eventsStream(s, d)),
             path, "k", "term", maxMapSize = 32, ckpt.toString)
         }
         try q.processAllAvailable() finally q.stop()
         path
-      })
+      }
       val merged = graft.operators.IncrementalAgg.readState(s, state)
         .select(freqItems(col("sk")).as("items"),
           freqMaxError(col("sk")).as("maxerr"))
@@ -1653,16 +1531,16 @@ object StreamQueries {
     //     files flip the hash. StreamingSpec drives the two-launch
     //     backlog-then-resume scenario. --------------------------------------
     "s12_stream_availablenow" -> ((s, d) => {
-      val layout = ingested.computeIfAbsent(s"$d#availablenow", { _ =>
-        val srcDir = tmpDir("an_src")
+      val layout = Artifacts.once("stream_availablenow", d) {
+        val srcDir = Artifacts.dir("an_src")
         // fragment the backlog so the catch-up actually paces: 8 files at
         // 2 files/batch → 4 micro-batches before self-termination
         Tables.events(s, d)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"))
           .repartition(8).write.mode("overwrite").parquet(srcDir.toString)
-        val outDir = tmpDir("an_out", create = false)
-        val ckpt = tmpDir("an_ckpt")
+        val outDir = new java.io.File(Artifacts.dir("an_out"), "out")
+        val ckpt = Artifacts.dir("an_ckpt")
         val schema = s.read.parquet(srcDir.toString).schema
         val q = withStatePartitions(s, 8) {
           s.readStream.schema(schema)
@@ -1675,7 +1553,7 @@ object StreamQueries {
         }
         q.awaitTermination() // AvailableNow self-terminates when caught up
         outDir.toString
-      })
+      }
       s.read.parquet(layout)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_events"),

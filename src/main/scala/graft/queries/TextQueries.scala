@@ -1,6 +1,6 @@
 package graft.queries
 
-import graft.Tables
+import graft.{Artifacts, Tables}
 import graft.functions.GraftFunctions
 import graft.operators.{Contamination, Dedup, HtmlExtract, Multimodal, Packing, Pipelines, Quantize, Sampling, Similarity, TextAnalysis, UrlCuration, Vocab}
 import graft.sources.Sinks
@@ -69,14 +69,6 @@ object TextQueries {
     sb.toString
   }
 
-  // Memoized ANN index builds, keyed by sf dir (deterministic: seeded
-  // init + fixed iteration count, so a cached codebook is bit-identical
-  // to a retrained one). Index construction is an OFFLINE step at scale —
-  // PQ/IVF systems train once and serve every query from the artifact —
-  // so repeat invocations (Bench warmup → measured phase) time the query
-  // side, exactly like the q71/q74/s02 sink memoization. Verify runs in a
-  // fresh JVM with one invocation per query: its first-call path still
-  // trains from scratch, so the correctness gate covers training.
   // Small driver-side pool for OVERLAPPING independent retrieval legs of
   // the eval harnesses (guide §2.6: actions are only sequential because
   // the driver calls them sequentially; a few jobs in flight let the next
@@ -95,38 +87,47 @@ object TextQueries {
           }
         }))
 
-  private val ivfCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[(Long, Array[Float])]]()
-  // PQ index = driver-held codebook + on-disk code table (the parquet
-  // artifact a PQ system serves from; 64 dims of f32 → 8 small ints/row)
-  private val pqIndexes =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[(Int, Int, Array[Float])], String)]()
-  // IVF-PQ index = coarse codebook + PQ codebook + on-disk code table
-  // partitioned by coarse cell (the artifact an IVFADC system serves from)
-  private val ivfPqIndexes =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[(Long, Array[Float])], Seq[(Int, Int, Array[Float])], String)]()
-  // JL tier-1 index = on-disk reduced-vector + norm table (what the e17
-  // shortlist scan reads; targetDim/sourceDim of the full-width bytes)
-  private val jlIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // d67 training-shard export dir, written once per (JVM, sf dir)
-  private val trainShardExports =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // d72 two-batch (write + append) export dir, written once per (JVM, sf)
-  private val appendShardExports =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  // e27 chunk ANN tier = chunk-space coarse codebook + on-disk chunk
-  // index partitioned by cell (the artifact a RAG serving tier reads;
-  // cell assignment is row-local so s25's maintenance composes)
-  private val chunkIvfIndexes =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[(Long, Array[Float])], String)]()
-  // e30 sparse serving tier: the persisted BM25 posting index over the
-  // held-out-split chunk corpus, committed once per (JVM, sf dir)
-  private val bm25ChunkIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+  // ANN index builds, once per (JVM, sf dir) (deterministic: seeded
+  // init + fixed iteration count, so a cached codebook is bit-identical
+  // to a retrained one). Index construction is an OFFLINE step at scale —
+  // PQ/IVF systems train once and serve every query from the artifact —
+  // so repeat invocations (Bench warmup → measured phase) time the query
+  // side, exactly like the q71/q74/s02 sink memoization. Verify runs in a
+  // fresh JVM with one invocation per query: its first-call path still
+  // trains from scratch, so the correctness gate covers training.
+  /** e06's seeded k-means IVF codebook over `d`'s embeddings, built once
+    * per (JVM, sf dir); shared by the e06/e22/e23 rows and the semantic
+    * dedup row. */
+  private def ivfCodebookFor(s: SparkSession, d: String): Seq[(Long, Array[Float])] =
+    Artifacts.once("text_ivf_codebook", d) {
+      Similarity.kmeansCentroidsCollected(Tables.embeddings(s, d),
+        "vec_id", "embedding", k = 16, iters = 3, seed = 42L)
+    }
+
+  /** PQ index = driver-held codebook + on-disk code table (the parquet
+    * artifact a PQ system serves from; 64 dims of f32 → 8 small ints/row);
+    * shared by e08 and e25. */
+  private def pqIndexFor(
+      s: SparkSession, d: String): (Seq[(Int, Int, Array[Float])], String) =
+    Artifacts.once("text_pq_index", d) {
+      val emb = Tables.embeddings(s, d)
+      val cb = Similarity.pqTrainNormalizedCollected(emb, "vec_id", "embedding")
+      val dir = new java.io.File(Artifacts.dir("index_pq"), "codes").toString
+      Similarity.pqEncodePackedNormalized(Similarity.pqCodebookDF(s, cb), emb,
+        "vec_id", "embedding").write.mode("overwrite").parquet(dir)
+      (cb, dir)
+    }
+
+  /** JL tier-1 index = on-disk reduced-vector + norm table (what the e17
+    * shortlist scan reads; targetDim/sourceDim of the full-width bytes);
+    * shared by e17 and e25. */
+  private def jlIndexFor(s: SparkSession, d: String): String =
+    Artifacts.once("text_jl_index", d) {
+      val dir = new java.io.File(Artifacts.dir("index_jl"), "index").toString
+      Similarity.jlBuildIndex(Tables.embeddings(s, d), "vec_id", "embedding")
+        .write.mode("overwrite").parquet(dir)
+      dir
+    }
 
   /** Chunk-IVF codebook + cell-partitioned index dir for the held-out
     * split of `d`'s documents — built once per (JVM, sf dir); shared by
@@ -136,7 +137,7 @@ object TextQueries {
   private def chunkIvfIndexFor(
       s: org.apache.spark.sql.SparkSession,
       d: String): (Seq[(Long, Array[Float])], String) =
-    chunkIvfIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("text_chunk_ivf_index", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
@@ -145,7 +146,7 @@ object TextQueries {
       try {
         val cb = Similarity.chunkIvfCentroidsCollected(index,
           nCells = 8, iters = 2, seed = 42L)
-        val dir = new java.io.File(indexTmpDir("chunkivf"), "index").toString
+        val dir = new java.io.File(Artifacts.dir("index_chunkivf"), "index").toString
         Similarity.chunkIvfIndex(index, cb)
           // hash-distribute by the partition column before the write
           // (guide §6 / Iceberg write.distribution-mode=hash): one file
@@ -156,14 +157,12 @@ object TextQueries {
           .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
         (cb, dir)
       } finally graft.operators.Dedup.release(index)
-    })
+    }
 
   // e35 dense takedown tier: the chunk-IVF index as VERSIONED state
   // (full-corpus build under e31's frozen quantizer, then the %13-block
   // docs retracted via the generic row-local retraction) — a separate
   // artifact so e27/e31's partitioned dir stays untouched
-  private val ivfRetractStates =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The e35 retracted chunk-IVF state: extendIndex of the full held-out
     * corpus at batch 0 (the SAME frozen codebook as e27/e31 — a takedown
@@ -172,39 +171,36 @@ object TextQueries {
     * retract ≡ rebuild-on-survivors provable. */
   private def ivfRetractStateFor(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    ivfRetractStates.computeIfAbsent(d, _ => {
+    Artifacts.once("text_ivf_retract_state", d) {
       val (cents, _) = chunkIvfIndexFor(s, d)
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
-      val dir = new java.io.File(indexTmpDir("ivfr"), "state").toString
+      val dir = new java.io.File(Artifacts.dir("index_ivfr"), "state").toString
       Similarity.chunkIvfExtendIndex(s, dir, corpus, "doc_id", "text",
         cents, batchId = 0L)
       graft.operators.IncrementalAgg.retractRows(s, dir,
         corpus.filter(pmod(col("doc_id"), lit(13)) === 3)
           .select(col("doc_id")), batchId = 1L)
       dir
-    })
+    }
 
   // e33 serving artifacts over the PLANTED eval corpus (the FULL document
   // table — e29's construction needs every query's source doc IN the
   // corpus, unlike the e27/e30 held-out split): chunk-IVF codebook +
   // cell-partitioned dir + BM25 posting state, built once per (JVM, sf)
-  private val evalServingIndexes =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[(Long, Array[Float])], String, String)]()
 
   private def evalServingIndexFor(
       s: org.apache.spark.sql.SparkSession,
       d: String): (Seq[(Long, Array[Float])], String, String) =
-    evalServingIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("text_eval_serving_indexes", d) {
       val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
       val index = Similarity.chunkIndex(docs, "doc_id", "text")
         .localCheckpoint(true)
       val (cb, ivfDir) = try {
         val cb = Similarity.chunkIvfCentroidsCollected(index,
           nCells = 8, iters = 2, seed = 42L)
-        val dir = new java.io.File(indexTmpDir("evalivf"), "index").toString
+        val dir = new java.io.File(Artifacts.dir("index_evalivf"), "index").toString
         Similarity.chunkIvfIndex(index, cb)
           // hash-distribute by the partition column before the write
           // (guide §6 / Iceberg write.distribution-mode=hash): one file
@@ -218,35 +214,33 @@ object TextQueries {
       val chunks = graft.operators.Packing
         .chunkTokens(docs, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val bmDir = new java.io.File(indexTmpDir("evalbm25"), "state").toString
+      val bmDir = new java.io.File(Artifacts.dir("index_evalbm25"), "state").toString
       graft.operators.Bm25Index.extendIndex(s, bmDir, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
       (cb, ivfDir, bmDir)
-    })
+    }
 
   /** Versioned BM25 posting-index state dir over the SAME held-out-split
     * chunk corpus — built once per (JVM, sf dir); shared by the e30
     * served-ranking row and the e31 hybrid serving row. */
   private def bm25ChunkIndexFor(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    bm25ChunkIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("text_bm25_index", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = graft.operators.Packing
         .chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val dir = new java.io.File(indexTmpDir("bm25"), "state").toString
+      val dir = new java.io.File(Artifacts.dir("index_bm25"), "state").toString
       graft.operators.Bm25Index.extendIndex(s, dir, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
       dir
-    })
+    }
 
   // e34 deletion-propagation tier: a SEPARATE index state (mutating the
   // shared e30/e31/s26 artifact would poison their gates) — full build
   // at batch 0, then the %13-block docs retracted at batch 1
-  private val bm25RetractIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The e34 retracted posting index: e30's full chunk-corpus build, then
     * [[graft.operators.Bm25Index.retractFromIndex]] of every chunk of the
@@ -256,14 +250,14 @@ object TextQueries {
     * once per (JVM, sf dir). */
   private def bm25RetractIndexFor(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    bm25RetractIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("text_bm25_retract_index", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = graft.operators.Packing
         .chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val dir = new java.io.File(indexTmpDir("bm25r"), "state").toString
+      val dir = new java.io.File(Artifacts.dir("index_bm25r"), "state").toString
       graft.operators.Bm25Index.extendIndex(s, dir, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
       graft.operators.Bm25Index.retractFromIndex(s, dir,
@@ -271,25 +265,21 @@ object TextQueries {
           .select(col("doc_id")),
         Seq("doc_id", "chunk_id"), batchId = 1L)
       dir
-    })
+    }
 
   // e39/e40: the query-result cache state dirs, memoized per (JVM, sf dir)
-  private val bm25CacheDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
   private def bm25CacheDirFor(d: String): String =
-    bm25CacheDirs.computeIfAbsent(d,
-      _ => new java.io.File(indexTmpDir("bm25qc"), "state").toString)
-  private val denseCacheDirs =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    Artifacts.once("text_bm25_cache_dir", d) {
+      new java.io.File(Artifacts.dir("index_bm25qc"), "state").toString
+    }
   private def denseCacheDirFor(d: String): String =
-    denseCacheDirs.computeIfAbsent(d,
-      _ => new java.io.File(indexTmpDir("denseqc"), "state").toString)
+    Artifacts.once("text_dense_cache_dir", d) {
+      new java.io.File(Artifacts.dir("index_denseqc"), "state").toString
+    }
 
   // e38: a SEPARATE retracted-then-COMPACTED index (compacting e34's
   // shared artifact would be read-invisible, but a separate state keeps
   // each row's construction self-describing)
-  private val bm25CompactIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The e38 compacted posting index: e34's construction, then
     * [[graft.operators.Bm25Index.compactIndex]] folds the takedown
@@ -298,14 +288,14 @@ object TextQueries {
     * dir). */
   private def bm25CompactIndexFor(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    bm25CompactIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("text_bm25_compact_index", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = graft.operators.Packing
         .chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val dir = new java.io.File(indexTmpDir("bm25c"), "state").toString
+      val dir = new java.io.File(Artifacts.dir("index_bm25c"), "state").toString
       graft.operators.Bm25Index.extendIndex(s, dir, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
       graft.operators.Bm25Index.retractFromIndex(s, dir,
@@ -314,15 +304,13 @@ object TextQueries {
         Seq("doc_id", "chunk_id"), batchId = 1L)
       graft.operators.Bm25Index.compactIndex(s, dir, batchId = 2L)
       dir
-    })
+    }
 
   // e41: cache maintenance under index churn — a SEPARATE index (its
   // version history must differ from e30/e39's shared artifact) extended
   // in two id-range batches with the result cache populated under EACH
   // committed version; maintenance then evicts the first version's
   // now-unreachable entries and folds the per-batch cache segments
-  private val bm25MaintCaches =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   /** The e41 artifact pair (index state, MAINTAINED cache): extend half
     * the chunk corpus (batch 0), serve the query batch cached (populates
@@ -333,7 +321,7 @@ object TextQueries {
     * sf dir). */
   private def bm25MaintCacheFor(
       s: org.apache.spark.sql.SparkSession, d: String): (String, String) =
-    bm25MaintCaches.computeIfAbsent(d, _ => {
+    Artifacts.once("text_bm25_maint_cache", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
@@ -344,8 +332,8 @@ object TextQueries {
         .filter(pmod(col("doc_id"), lit(101)) === 5)
         .select(col("doc_id"), col("text"))
       val cut = corpus.agg(max(col("doc_id"))).head.getLong(0) / 2
-      val state = new java.io.File(indexTmpDir("bm25m"), "state").toString
-      val cache = new java.io.File(indexTmpDir("bm25mqc"), "cache").toString
+      val state = new java.io.File(Artifacts.dir("index_bm25m"), "state").toString
+      val cache = new java.io.File(Artifacts.dir("index_bm25mqc"), "cache").toString
       def serve(): Unit = {
         graft.operators.Bm25Index.bm25TopKBatchCached(s, state, cache,
           queries, Seq("doc_id", "chunk_id"), "doc_id", "text", k = 10)
@@ -362,14 +350,12 @@ object TextQueries {
       require(graft.operators.Bm25Index.maintainQueryCache(s, state, cache,
         k = 10, maxSegments = 1), "e41 setup: maintenance must fire")
       (state, cache)
-    })
+    }
 
   // e42: segment-count maintenance on a long-running ingest — the index
   // built in FOUR id-range extends with the small-suffix fold
   // interleaved, so the committed layout is the maintained one, not the
   // one-shot build's
-  private val bm25SegMaintIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The e42 segment-maintained index: four monotone id-range extend
     * batches with
@@ -380,7 +366,7 @@ object TextQueries {
     * (JVM, sf dir). */
   private def bm25SegMaintFor(
       s: org.apache.spark.sql.SparkSession, d: String): String =
-    bm25SegMaintIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("text_bm25_segmaint_index", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
@@ -389,7 +375,7 @@ object TextQueries {
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
       val m = corpus.agg(max(col("doc_id"))).head.getLong(0)
       val cuts = Seq(Long.MinValue, m / 4, m / 2, 3 * m / 4, Long.MaxValue)
-      val state = new java.io.File(indexTmpDir("bm25sg"), "state").toString
+      val state = new java.io.File(Artifacts.dir("index_bm25sg"), "state").toString
       cuts.sliding(2).zipWithIndex.foreach { case (Seq(lo, hi), i) =>
         graft.operators.Bm25Index.extendIndex(s, state,
           chunks.filter(col("doc_id") > lo && col("doc_id") <= hi),
@@ -399,14 +385,12 @@ object TextQueries {
         ()
       }
       state
-    })
+    }
 
   // e43: the DENSE twin of e41 — cache maintenance where takedowns churn
   // versions (e40's regime): a SEPARATE chunk-IVF state, cached serves
   // under the pre- and post-retraction versions, then maintenance evicts
   // the pre-retraction entries
-  private val denseMaintCaches =
-    new java.util.concurrent.ConcurrentHashMap[String, (String, String)]()
 
   /** The e43 artifact pair (chunk-IVF state, MAINTAINED dense cache):
     * full build (frozen quantizer — e35's doctrine), cached serve
@@ -417,7 +401,7 @@ object TextQueries {
     * Committed once per (JVM, sf dir). */
   private def denseMaintCacheFor(
       s: org.apache.spark.sql.SparkSession, d: String): (String, String) =
-    denseMaintCaches.computeIfAbsent(d, _ => {
+    Artifacts.once("text_dense_maint_cache", d) {
       val (cents, _) = chunkIvfIndexFor(s, d)
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
@@ -425,8 +409,8 @@ object TextQueries {
       val queries = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) === 5)
         .select(col("doc_id"), col("text"))
-      val state = new java.io.File(indexTmpDir("ivfm"), "state").toString
-      val cache = new java.io.File(indexTmpDir("ivfmqc"), "cache").toString
+      val state = new java.io.File(Artifacts.dir("index_ivfm"), "state").toString
+      val cache = new java.io.File(Artifacts.dir("index_ivfmqc"), "cache").toString
       def serve(): Unit = {
         Similarity.chunkRetrieveFromIvfStateCached(s, state, cache, cents,
           queries, "doc_id", "text", k = 3, nProbe = 8).count(); ()
@@ -442,18 +426,13 @@ object TextQueries {
         k = 3, nProbe = 8, maxSegments = 1),
         "e43 setup: maintenance must fire")
       (state, cache)
-    })
+    }
 
   // d51/s19 shared quality model, memoized per (JVM, sf dir): the batch
   // gate and the streaming router must score with the SAME trained
   // weights (float GD weights are partition-order sensitive, so sharing
   // the artifact — not retraining — is what makes stream ≡ batch an
   // exact-equality gate)
-  private val binaryStaged =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val qualityModels = new java.util.concurrent.ConcurrentHashMap[
-    String, (Seq[String], Array[Double])]()
-
   /** Train (once per JVM+dir) the d51 quality classifier: labels planted
     * from a known linear rule over the quality features, split at the
     * exact score median. Returns (featureCols, raw-space weights,
@@ -476,7 +455,7 @@ object TextQueries {
     val labeled = withF
       .withColumn("y", (lin > med).cast("int"))
       .drop("text")
-    val (cols, w) = qualityModels.computeIfAbsent(d, { _ =>
+    val (cols, w) = Artifacts.once("text_quality_model", d) {
       // checkpoint only for the training collect, and RELEASE it — a
       // caller (s19) that keeps just the weights must not strand a
       // persisted block (QueriesSpec's suite-wide leak gate)
@@ -488,7 +467,7 @@ object TextQueries {
           lr.rdd.unpersist(false); ()
         case _ =>
       }
-    })
+    }
     (cols, w, labeled)
   }
 
@@ -513,17 +492,6 @@ object TextQueries {
             pmod(col("doc_id"), lit(17)).cast("string"), lit(".example"))),
         when(pmod(col("doc_id"), lit(7)) === 3, lit(":8080")).otherwise(lit("")),
         lit("/p/"), col("doc_id").cast("string")).as("url"))
-
-  private def indexTmpDir(tag: String): java.io.File = {
-    val f = java.nio.file.Files.createTempDirectory(s"graft_index_$tag").toFile
-    sys.addShutdownHook {
-      def rm(x: java.io.File): Unit = {
-        Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()
-      }
-      rm(f)
-    }
-    f
-  }
 
   val defs: Map[String, Q] = Map(
     // --- token counting ---------------------------------------------------
@@ -1221,23 +1189,16 @@ object TextQueries {
       // export written ONCE per (JVM, sf dir) — the q71/e08 sink
       // memoization: training shards are written once and mounted many
       // times, so repeat invocations (bench) time the read+manifest
-      // serving side; Verify's fresh JVM still exercises the full
-      // wipe+write path. The wipe guards against a stale on-disk export
-      // (older code, different budget) leaking rows into the read-back.
-      val out = trainShardExports.computeIfAbsent(d, _ => {
-        val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_train_shards_${Integer.toHexString(d.hashCode)}").toString
-        val p = java.nio.file.Paths.get(dir)
-        if (java.nio.file.Files.isDirectory(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.delete)
-        }
+      // serving side; Verify's fresh JVM still exercises the full write
+      // path, into a fresh scratch dir (no stale export can leak rows
+      // into the read-back).
+      val out = Artifacts.once("text_train_shards", d) {
+        val dir = new java.io.File(Artifacts.dir("train_shards"), "shards").toString
         Sinks.writeTrainingShards(s,
           Tables.documents(s, d).select(col("doc_id"), col("text")),
           dir, "doc_id", "text", tokensPerShard = 4096L)
         dir
-      })
+      }
       Sinks.trainingShardManifest(Sinks.readTrainingShards(s, out))
         .select(col("shard_id").cast("long").as("shard_id"),
           col("n_docs"), col("n_tokens"), col("order_digest"))
@@ -1254,15 +1215,8 @@ object TextQueries {
     //     Full-rebuild equivalence is NOT claimed (a rebuild would
     //     interleave batches across every shard — that is the point). --
     "d72_append_shards" -> ((s, d) => {
-      val out = appendShardExports.computeIfAbsent(d, _ => {
-        val dir = new java.io.File(System.getProperty("java.io.tmpdir"),
-          s"graft_append_shards_${Integer.toHexString(d.hashCode)}").toString
-        val p = java.nio.file.Paths.get(dir)
-        if (java.nio.file.Files.isDirectory(p)) {
-          import scala.jdk.CollectionConverters._
-          java.nio.file.Files.walk(p).iterator().asScala.toSeq.reverse
-            .foreach(java.nio.file.Files.delete)
-        }
+      val out = Artifacts.once("text_append_shards", d) {
+        val dir = new java.io.File(Artifacts.dir("append_shards"), "shards").toString
         val docs = Tables.documents(s, d).select(col("doc_id"), col("text"))
         val t = docs.agg(call_function("div", max(col("doc_id")) * 4, lit(5L)))
           .head.getLong(0)
@@ -1271,7 +1225,7 @@ object TextQueries {
         Sinks.appendTrainingShards(s, docs.filter(col("doc_id") > t),
           dir, "doc_id", "text")
         dir
-      })
+      }
       Sinks.trainingShardManifest(Sinks.readTrainingShards(s, out))
         .select(col("shard_id").cast("long").as("shard_id"),
           col("n_docs"), col("n_tokens"), col("order_digest"))
@@ -1449,9 +1403,7 @@ object TextQueries {
     "e22_cluster_balanced" -> ((s, d) => {
       GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
-      val cents = ivfCodebooks.computeIfAbsent(d, _ =>
-        Similarity.kmeansCentroidsCollected(emb, "vec_id", "embedding",
-          k = 16, iters = 3, seed = 42L))
+      val cents = ivfCodebookFor(s, d)
       val cap = 20
       def sample() = Similarity.clusterBalancedSample(
         emb, "vec_id", "embedding", cents, perCellCap = cap)
@@ -1484,9 +1436,7 @@ object TextQueries {
       GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(pmod(col("vec_id"), lit(50)) === 0)
-      val cents = ivfCodebooks.computeIfAbsent(d, _ =>
-        Similarity.kmeansCentroidsCollected(emb, "vec_id", "embedding",
-          k = 16, iters = 3, seed = 42L))
+      val cents = ivfCodebookFor(s, d)
       val curve = Similarity.ivfRecallCurve(Similarity.centroidsDF(s, cents),
         emb, probes, "vec_id", "embedding", k = 5, Seq(1, 2, 4, 8, 16))
       val w = org.apache.spark.sql.expressions.Window.orderBy(col("n_probe"))
@@ -1533,19 +1483,8 @@ object TextQueries {
       // reuse the memoized offline artifacts the e17/e08 tiers serve from
       // (fresh-JVM Verify still trains/builds from scratch — the gate
       // covers the full path); the curves then time pure serving sweeps
-      val jlIndexPath = jlIndexes.computeIfAbsent(d, _ => {
-        val dir = new java.io.File(indexTmpDir("jl"), "index").toString
-        Similarity.jlBuildIndex(emb, "vec_id", "embedding")
-          .write.mode("overwrite").parquet(dir)
-        dir
-      })
-      val (pqCodebook, _) = pqIndexes.computeIfAbsent(d, _ => {
-        val cb = Similarity.pqTrainNormalizedCollected(emb, "vec_id", "embedding")
-        val dir = new java.io.File(indexTmpDir("pq"), "codes").toString
-        Similarity.pqEncodePackedNormalized(Similarity.pqCodebookDF(s, cb), emb,
-          "vec_id", "embedding").write.mode("overwrite").parquet(dir)
-        (cb, dir)
-      })
+      val jlIndexPath = jlIndexFor(s, d)
+      val (pqCodebook, _) = pqIndexFor(s, d)
       // the two tiers' sweeps are independent — run them concurrently
       // (r21, guide §2.6; each sweep's jobs are unchanged)
       locally {
@@ -2259,9 +2198,7 @@ object TextQueries {
       GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(pmod(col("vec_id"), lit(50)) === 0)
-      val cents = ivfCodebooks.computeIfAbsent(d, _ =>
-        Similarity.kmeansCentroidsCollected(emb, "vec_id", "embedding",
-          k = 16, iters = 3, seed = 42L))
+      val cents = ivfCodebookFor(s, d)
       val ivf = Similarity.ivfTopKWith(Similarity.centroidsDF(s, cents),
           emb, probes, "vec_id", "embedding", k = 5, nProbe = 6)
         .select(col("probe_id"), col("neighbor_id"), lit(1).as("in_ivf"))
@@ -2283,13 +2220,7 @@ object TextQueries {
       GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(pmod(col("vec_id"), lit(50)) === 0)
-      val (codebook, codesPath) = pqIndexes.computeIfAbsent(d, _ => {
-        val cb = Similarity.pqTrainNormalizedCollected(emb, "vec_id", "embedding")
-        val dir = new java.io.File(indexTmpDir("pq"), "codes").toString
-        Similarity.pqEncodePackedNormalized(Similarity.pqCodebookDF(s, cb), emb,
-          "vec_id", "embedding").write.mode("overwrite").parquet(dir)
-        (cb, dir)
-      })
+      val (codebook, codesPath) = pqIndexFor(s, d)
       val pq = Similarity.pqTopKFromPackedCodes(
           Similarity.pqCodebookDF(s, codebook), s.read.parquet(codesPath),
           emb, probes, "vec_id", "embedding", k = 5)
@@ -2317,16 +2248,16 @@ object TextQueries {
       GraftFunctions.register(s)
       val emb = Tables.embeddings(s, d)
       val probes = emb.filter(pmod(col("vec_id"), lit(50)) === 0)
-      val (coarseCb, pqCb, indexPath) = ivfPqIndexes.computeIfAbsent(d, _ => {
+      val (coarseCb, pqCb, indexPath) = Artifacts.once("text_ivfpq_index", d) {
         val coarse = Similarity.kmeansCentroidsCollected(emb, "vec_id", "embedding",
           k = 16, iters = 3, seed = 42L)
         val pq = Similarity.pqTrainNormalizedCollected(emb, "vec_id", "embedding")
-        val dir = new java.io.File(indexTmpDir("ivfpq"), "index").toString
+        val dir = new java.io.File(Artifacts.dir("index_ivfpq"), "index").toString
         Similarity.ivfPqBuildIndexPacked(Similarity.centroidsDF(s, coarse),
             Similarity.pqCodebookDF(s, pq), emb, "vec_id", "embedding")
           .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
         (coarse, pq, dir)
-      })
+      }
       val ivfpq = Similarity.ivfPqTopKFromPackedIndex(
           Similarity.centroidsDF(s, coarseCb), Similarity.pqCodebookDF(s, pqCb),
           s.read.parquet(indexPath), emb, probes,
@@ -2493,8 +2424,8 @@ object TextQueries {
     //     length + md5, both replicable from the source table since the
     //     corpus is pure ASCII (byte length = strlen). ---------------------
     "m07_binary_ingest" -> ((s, d) => {
-      val dir = binaryStaged.computeIfAbsent(d, { _ =>
-        val f = indexTmpDir("binfiles")
+      val dir = Artifacts.once("text_binary_files", d) {
+        val f = Artifacts.dir("index_binfiles")
         Tables.documents(s, d)
           .filter(pmod(col("doc_id"), lit(10)) === 0)
           .select(col("doc_id"), col("text")).collect()
@@ -2504,7 +2435,7 @@ object TextQueries {
               r.getString(1).getBytes(java.nio.charset.StandardCharsets.UTF_8))
           }
         f.toString
-      })
+      }
       s.read.format("binaryFile").load(dir)
         .select(
           regexp_extract(col("path"), "doc_(\\d+)\\.bin$", 1)
@@ -2654,12 +2585,7 @@ object TextQueries {
       // tier-1 index built once per (JVM, sf) and served from parquet —
       // same offline-index semantics as e08/e10's code tables; repeat
       // invocations time index-read serving, not the projection build
-      val indexPath = jlIndexes.computeIfAbsent(d, _ => {
-        val dir = new java.io.File(indexTmpDir("jl"), "index").toString
-        Similarity.jlBuildIndex(emb, "vec_id", "embedding")
-          .write.mode("overwrite").parquet(dir)
-        dir
-      })
+      val indexPath = jlIndexFor(s, d)
       val jl = Similarity.jlTopKFromIndex(s.read.parquet(indexPath),
           emb, probes, "vec_id", "embedding", k = 5, shortlist = shortlist)
         .select(col("probe_id"), col("neighbor_id"), lit(1).as("in_jl"))
@@ -2859,9 +2785,7 @@ object TextQueries {
               lit(0.05) * sin(col("vec_id").cast("double") + i.cast("double")))
               .cast("float")).as("embedding"))
       val corpus = emb.unionAll(clones)
-      val cents = Similarity.centroidsDF(s, ivfCodebooks.computeIfAbsent(d, _ =>
-        Similarity.kmeansCentroidsCollected(emb, "vec_id", "embedding",
-          k = 16, iters = 3, seed = 42L)))
+      val cents = Similarity.centroidsDF(s, ivfCodebookFor(s, d))
       val semPairs = Dedup.semDedupPairs(corpus, "vec_id", "embedding", cents,
         tau = 0.95) // checkpointed: the gate and the keep-side both read it
       val sem = semPairs.select(col("id_a"), col("id_b"), lit(1).as("in_sem"))

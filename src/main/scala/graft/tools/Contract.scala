@@ -13,7 +13,6 @@ object Contract {
     val o = SparkEntry.oracleSql
     println(s"queries=${q.size} oracles=${o.size} missingOracle=${q.keySet -- o.keySet} strayOracle=${o.keySet -- q.keySet}")
     println(s"entry rows=${SparkEntry.entry(spark).count()}")
-    println(s"setupQueries all exist: ${SparkEntry.setupQueries.forall(q.contains)}")
     spark.stop()
   }
 }

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{SparkEntry, Tables}
+import graft.{Artifacts, SparkEntry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -22,6 +22,7 @@ import org.apache.spark.sql.functions._
   */
 object ScaleSmoke {
   private val SRC = "/root/testdata/sf0.1"
+  private val WARM = new java.io.File(new java.io.File(SRC).getParentFile, "sf0.001").toString
   private val DST = "/tmp/graft_sf1"
   private val TILES = 10
   private val OFF = 10000000L
@@ -160,8 +161,7 @@ object ScaleSmoke {
     // WRITE path end-to-end at both scales
     "d67_write_path" -> ((s, d) => {
       import org.apache.spark.sql.functions._
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_tshard_smoke").toString
+      val dir = Artifacts.dir("tshard_smoke").toString
       graft.sources.Sinks.writeTrainingShards(s,
         Tables.documents(s, d).select(col("doc_id"), col("text")),
         dir, "doc_id", "text", tokensPerShard = 4096L)
@@ -241,21 +241,7 @@ object ScaleSmoke {
       val queries = docs
         .filter(pmod(col("doc_id"), lit(101)) === 5 && col("doc_id") < OFF)
         .select(col("doc_id"), col("text"))
-      val corpus = docs.filter(pmod(col("doc_id"), lit(101)) =!= 5)
-        .select(col("doc_id"), col("text"))
-      val (cents, path) = chunkIvfSmoke.computeIfAbsent(d, _ => {
-        val index = graft.operators.Similarity
-          .chunkIndex(corpus, "doc_id", "text").localCheckpoint(true)
-        try {
-          val cb = graft.operators.Similarity
-            .chunkIvfCentroidsCollected(index, nCells = 8, iters = 2)
-          val dir = java.nio.file.Files
-            .createTempDirectory("graft_smoke_chunkivf").toString
-          graft.operators.Similarity.chunkIvfIndex(index, cb)
-            .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
-          (cb, dir)
-        } finally graft.operators.Dedup.release(index)
-      })
+      val (cents, path) = chunkIvfSmoke(s, d)
       graft.operators.Similarity.chunkRetrieveFromIvfIndex(
         s.read.parquet(path), cents, queries, "doc_id", "text",
         k = 3, nProbe = 2)
@@ -349,21 +335,7 @@ object ScaleSmoke {
       val queries = docs
         .filter(pmod(col("doc_id"), lit(101)) === 5 && col("doc_id") < OFF)
         .select(col("doc_id"), col("text"))
-      val corpus = docs.filter(pmod(col("doc_id"), lit(101)) =!= 5)
-        .select(col("doc_id"), col("text"))
-      val (cents, path) = chunkIvfSmoke.computeIfAbsent(d, _ => {
-        val index = graft.operators.Similarity
-          .chunkIndex(corpus, "doc_id", "text").localCheckpoint(true)
-        try {
-          val cb = graft.operators.Similarity
-            .chunkIvfCentroidsCollected(index, nCells = 8, iters = 2)
-          val dir = java.nio.file.Files
-            .createTempDirectory("graft_smoke_chunkivf").toString
-          graft.operators.Similarity.chunkIvfIndex(index, cb)
-            .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
-          (cb, dir)
-        } finally graft.operators.Dedup.release(index)
-      })
+      val (cents, path) = chunkIvfSmoke(s, d)
       val dense = graft.operators.Similarity.chunkRetrieveFromIvfIndex(
           s.read.parquet(path), cents, queries, "doc_id", "text",
           k = 10, nProbe = 2)
@@ -486,14 +458,27 @@ object ScaleSmoke {
         "text", minFreq = 1L, maxVocab = 4096)
     }))
 
-  private val chunkIvfSmoke =
-    new java.util.concurrent.ConcurrentHashMap[
-      String, (Seq[(Long, Array[Float])], String)]()
 
-  private val bm25SmokeIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
-  private val bm25BigVocabIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+
+  /** The e27/e31 serving smokes' chunk-IVF codebook + cell-partitioned
+    * index over `d`'s held-out-split corpus (the offline build). */
+  private def chunkIvfSmoke(
+      s: SparkSession, d: String): (Seq[(Long, Array[Float])], String) =
+    Artifacts.once("smoke_chunk_ivf_index", d) {
+      val corpus = Tables.documents(s, d)
+        .filter(pmod(col("doc_id"), lit(101)) =!= 5)
+        .select(col("doc_id"), col("text"))
+      val index = graft.operators.Similarity
+        .chunkIndex(corpus, "doc_id", "text").localCheckpoint(true)
+      try {
+        val cb = graft.operators.Similarity
+          .chunkIvfCentroidsCollected(index, nCells = 8, iters = 2)
+        val dir = Artifacts.dir("smoke_chunkivf").toString
+        graft.operators.Similarity.chunkIvfIndex(index, cb)
+          .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
+        (cb, dir)
+      } finally graft.operators.Dedup.release(index)
+    }
 
   /** doc_id-salted words (the d48_vocab_bound trick): vocabulary grows ∝
     * corpus rows, so a query batch's terms match ONLY its source docs'
@@ -509,18 +494,13 @@ object ScaleSmoke {
     * big vocabulary (1024 — at 100 TB the bucket count scales with the
     * term space exactly like IVF cell counts scale with the corpus). */
   private def bm25BigVocab(s: SparkSession, d: String): String =
-    bm25BigVocabIndexes.computeIfAbsent(d, _ => {
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_bm25big").toString + "/state"
+    Artifacts.once("smoke_bm25_bigvocab_index", d) {
+      val dir = Artifacts.dir("smoke_bm25big").toString + "/state"
       graft.operators.Bm25Index.extendIndex(s, dir,
         salted(Tables.documents(s, d).select(col("doc_id"), col("text"))),
         Seq("doc_id"), "text", batchId = 0L, nBuckets = 1024)
       dir
-    })
-  /** Persisted BM25 posting index over `d`'s held-out-split chunk corpus
-    * (the offline build the e30/e31 serving smokes read). */
-  private val bm25RetractSmokeIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
+    }
   private val retractBatchIds =
     new java.util.concurrent.atomic.AtomicLong(10L)
 
@@ -528,15 +508,14 @@ object ScaleSmoke {
     * docs retracted once. Kept separate from [[bm25Smoke]]'s state so
     * e30_fixed_serve stays unretracted. */
   private def bm25RetractSmoke(s: SparkSession, d: String): String =
-    bm25RetractSmokeIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("smoke_bm25_retract_index", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = graft.operators.Packing
         .chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_bm25r").toString + "/state"
+      val dir = Artifacts.dir("smoke_bm25r").toString + "/state"
       graft.operators.Bm25Index.extendIndex(s, dir, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
       graft.operators.Bm25Index.retractFromIndex(s, dir,
@@ -544,15 +523,13 @@ object ScaleSmoke {
           .select(col("doc_id")),
         Seq("doc_id", "chunk_id"), batchId = 1L)
       dir
-    })
+    }
 
   // batch-id + fresh-id-range counter shared by the delta-commit rows:
   // globally monotone, so every commit on the shared per-dir state keeps
   // the append guard satisfied across interleaved rows and repeat runs
   private val deltaCommitIds =
     new java.util.concurrent.atomic.AtomicLong(100L)
-  private val bm25ExtendSmokeIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The FIXED extend/retract delta: 500 sf0.1 docs re-keyed into a fresh
     * monotone id block per call — identical content at every state size,
@@ -571,22 +548,19 @@ object ScaleSmoke {
     * build, untimed): the corpus as batch 0. Separate from [[bm25Smoke]]
     * so the serving rows never see the synthetic extend/retract churn. */
   private def bm25ExtendSmoke(s: SparkSession, d: String): String =
-    bm25ExtendSmokeIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("smoke_bm25_extend_index", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = graft.operators.Packing
         .chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_bm25x").toString + "/state"
+      val dir = Artifacts.dir("smoke_bm25x").toString + "/state"
       graft.operators.Bm25Index.extendIndex(s, dir, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
       dir
-    })
+    }
 
-  private val bm25TombSmokeIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The tombstone-flatness pair's per-dir state: the FIXED sf0.1 chunk
     * corpus committed at batch 0, then a retraction whose delete-set size
@@ -595,15 +569,14 @@ object ScaleSmoke {
     * identical in every state: the only variable is the committed
     * tombstone volume the serve's anti-joins must apply. */
   private def bm25TombSmoke(s: SparkSession, d: String): String =
-    bm25TombSmokeIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("smoke_bm25_tomb_index", d) {
       val corpus = Tables.documents(s, SRC)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = graft.operators.Packing
         .chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_bm25tb").toString + "/state"
+      val dir = Artifacts.dir("smoke_bm25tb").toString + "/state"
       graft.operators.Bm25Index.extendIndex(s, dir, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
       val mod = if (d == SRC) 1009 else if (d == DST) 101 else 11
@@ -615,24 +588,21 @@ object ScaleSmoke {
         graft.operators.IncrementalAgg.tombstoneRows(s, dir,
           graft.operators.Bm25Index.PostingsPart) + " tombstone rows")
       dir
-    })
+    }
 
-  private val bm25FoldSmokeIndexes =
-    new java.util.concurrent.ConcurrentHashMap[String, String]()
 
   /** The fold-flatness pair's per-dir state: SRC = the corpus as one
     * batch-0 commit; the big dir = the SAME corpus in 12 monotone
     * id-range extends with the segment-count fold interleaved. */
   private def bm25FoldSmoke(s: SparkSession, d: String): String =
-    bm25FoldSmokeIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("smoke_bm25_fold_index", d) {
       val corpus = Tables.documents(s, SRC)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = graft.operators.Packing
         .chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_bm25fd").toString + "/state"
+      val dir = Artifacts.dir("smoke_bm25fd").toString + "/state"
       if (d == SRC)
         graft.operators.Bm25Index.extendIndex(s, dir, chunks,
           Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
@@ -655,32 +625,30 @@ object ScaleSmoke {
           " live posting segments after 12 extends")
       }
       dir
-    })
+    }
 
+  /** Persisted BM25 posting index over `d`'s held-out-split chunk corpus
+    * (the offline build the e30/e31 serving smokes read). */
   private def bm25Smoke(s: SparkSession, d: String): String =
-    bm25SmokeIndexes.computeIfAbsent(d, _ => {
+    Artifacts.once("smoke_bm25_index", d) {
       val corpus = Tables.documents(s, d)
         .filter(pmod(col("doc_id"), lit(101)) =!= 5)
         .select(col("doc_id"), col("text"))
       val chunks = graft.operators.Packing
         .chunkTokens(corpus, "doc_id", "text", 16, 0)
         .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-      val dir = java.nio.file.Files
-        .createTempDirectory("graft_smoke_bm25").toString + "/state"
+      val dir = Artifacts.dir("smoke_bm25").toString + "/state"
       graft.operators.Bm25Index.extendIndex(s, dir, chunks,
         Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
       dir
-    })
+    }
 
-  private val semCodebooks =
-    new java.util.concurrent.ConcurrentHashMap[(String, Int),
-      Seq[(Long, Array[Float])]]()
   private def semPairs(s: SparkSession, d: String, k: Int): DataFrame = {
     graft.functions.GraftFunctions.register(s)
     val emb = Tables.embeddings(s, d).select("vec_id", "embedding")
-    val cents = semCodebooks.computeIfAbsent((d, k), _ =>
+    val cents = Artifacts.once(s"smoke_sem_codebook_k$k", d) {
       graft.operators.Similarity.kmeansCentroidsCollected(
-        emb, "vec_id", "embedding", k, iters = 3, seed = 42L))
+        emb, "vec_id", "embedding", k, iters = 3, seed = 42L)}
     graft.operators.Dedup.semDedupPairs(emb, "vec_id", "embedding",
       graft.operators.Similarity.centroidsDF(s, cents), tau = -1.0)
   }
@@ -706,12 +674,16 @@ object ScaleSmoke {
     else { ensureData(spark); ensureRelationalTiles(spark) }
     val names =
       if (rest.nonEmpty) rest else if (x100) X100 else DEFAULT
-    // JIT/codegen warmup at the smallest SF
-    names.foreach { n =>
-      try query(n)(spark, "/root/testdata/sf0.001").count()
-      catch { case t: Throwable =>
-        System.err.println(s"[scale] warmup $n failed: ${t.getMessage}") }
-    }
+    // JIT/codegen warmup at the smallest SF. A row whose warm-up reached a
+    // setup artifact (graft.Artifacts) other than the staged event source
+    // (prestage, below) is a setup row: it runs once untimed per dir.
+    val setupRows = names.filter { n =>
+      (Artifacts.touching {
+        try query(n)(spark, WARM).count()
+        catch { case t: Throwable =>
+          System.err.println(s"[scale] warmup $n failed: ${t.getMessage}") }
+      } -- graft.queries.StreamQueries.stagedEventArtifacts).nonEmpty
+    }.toSet
     val tag = if (x100) "sf10(100x)" else "sf1(10x)"
     println(f"${"query"}%-24s ${"sf0.1"}%8s $tag%10s  ratio ${"rows0.1"}%9s ${"rowsBig"}%9s")
     names.foreach { n =>
@@ -724,14 +696,10 @@ object ScaleSmoke {
         // accumulation (a harness artifact — production streams are one
         // long-running query), not the query
         graft.queries.StreamQueries.prestage(d)
-        // setup-phase queries (Bench contract) and the memoized-codebook
-        // e11 rows: run once untimed so the measured number is the
-        // steady-state serving/query side, matching Bench semantics
-        if (SparkEntry.setupQueries.contains(n) || n.startsWith("e11_pairs") ||
-            n.endsWith("_fixed_serve") || n == "e30_selective_serve" ||
-            n.endsWith("_delta_commit") || n.endsWith("_read_flat"))
-          // memoized index build = offline step
-          query(n)(spark, d).count()
+        // setup rows run once untimed (a memoized build is the offline
+        // step), so the measured number is the steady-state serving/query
+        // side, matching Bench semantics
+        if (setupRows(n)) query(n)(spark, d).count()
         System.gc(); Thread.sleep(150)
         val t0 = System.nanoTime()
         val rows = query(n)(spark, d).count()

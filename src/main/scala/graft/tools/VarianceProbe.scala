@@ -25,19 +25,7 @@ object VarianceProbe {
       .config("spark.cleaner.periodicGC.interval", "900s")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
-    SparkEntry.queries.foreach { case (name, fn) =>
-      try fn(spark, "/root/testdata/sf0.001").count()
-      catch { case t: Throwable =>
-        System.err.println(s"[var] warmup $name failed: ${t.getMessage}") }
-    }
-    SparkEntry.setupQueries.foreach { name =>
-      SparkEntry.queries.get(name).foreach { fn =>
-        try fn(spark, sfDir).count()
-        catch { case t: Throwable =>
-          System.err.println(s"[var] setup $name failed: ${t.getMessage}") }
-      }
-    }
+    Bench.warmup(spark, sfDir, "var")
     System.gc(); Thread.sleep(500)
     SparkEntry.queries.foreach { case (name, fn) =>
       val ts = (1 to reps).map { _ =>

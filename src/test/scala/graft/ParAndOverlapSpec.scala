@@ -26,6 +26,19 @@ class ParAndOverlapSpec extends SparkTestBase {
     assert(Par.floor(wide, "doc_id").rdd.getNumPartitions == par + 2)
   }
 
+  test("Par.join2 waits for both legs and keeps both failures") {
+    val bDone = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val err = intercept[IllegalStateException] {
+      Par.join2(
+        throw new IllegalStateException("leg a"),
+        try { Thread.sleep(300); throw new IllegalArgumentException("leg b") }
+        finally bDone.set(true))
+    }
+    assert(bDone.get, "join2 must not return before leg b has finished")
+    assert(err.getMessage == "leg a")
+    assert(err.getSuppressed.map(_.getMessage).toSeq == Seq("leg b"))
+  }
+
   test("gopherRulesCarry(carry) == gopherRules joined back on the carried columns") {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("doc_id"), col("source"), col("text"))
