@@ -1,6 +1,9 @@
 #!/bin/bash
 # Run a graft main class directly (after `sbt compile`), bypassing sbt's JVM
-# startup. Usage: scripts/run_main.sh graft.Verify /root/testdata/sf0.01 /tmp/out
+# startup. Usage: scripts/run_main.sh <main class> [args ...], e.g.
+#   scripts/run_main.sh graft.Verify <sf dir> <out dir>
+#   SPARK_GRAFT_SF_DIR=<sf dir> scripts/run_main.sh \
+#     graft.tools.Profile [--reps N] [--ab key=v1|v2] [query ...]
 set -e
 CLASS="$1"; shift
 ADD_OPENS=""

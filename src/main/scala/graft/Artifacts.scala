@@ -48,7 +48,7 @@ object Artifacts {
   }
 
   private lazy val root: java.io.File = {
-    val f = java.nio.file.Files.createTempDirectory("graft_artifacts_").toFile
+    val f = java.nio.file.Files.createTempDirectory("graft_scratch_").toFile
     sys.addShutdownHook {
       def rm(x: java.io.File): Unit = {
         Option(x.listFiles()).foreach(_.foreach(rm)); x.delete(); ()

@@ -12,41 +12,9 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      math.min(32, Runtime.getRuntime.availableProcessors()).toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // AQE coalescing floor lowered 1m -> 128k (r20, guide §2.2/§2.5):
-      // with parallelismFirst the coalesce target is max(bytes/cores,
-      // minPartitionSize), so at small per-shuffle byte counts the 1m
-      // floor binds and caps shuffle-consumer stages at a handful of
-      // tasks on a 32-core session. 128k keeps the partition count
-      // derived from input size / parallelism (scale-adaptive — at
-      // production shuffle sizes bytes/cores >> either floor and the
-      // setting is inert); measured -5% on the shuffle-heavy rows,
-      // neutral on the tail.
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "128k")
-      // ContextCleaner reclaims broadcast/shuffle/RDD state only when GC
-      // collects the weak refs; the default periodic-GC interval (30 min)
-      // never fires within a bench run, so 100+ queries' worth of state
-      // accumulates and turns into execution-memory pressure (round-6
-      // blowups). But a 30s timer (round 7) fires stop-the-world full GCs
-      // MID-query and taxed the suite ~1.3x. Resolution: effectively
-      // disable the timer and System.gc() explicitly at query boundaries
-      // (below), where the pause is outside every timed region.
-      .config("spark.cleaner.periodicGC.interval", "900s")
-      .getOrCreate()
-    // ERROR, not WARN: harmless "function X replaced" warnings would land on
-    // stdout between sbt [info] lines and eat into the driver's fixed-size
-    // stdout tail window that must contain the final JSON line.
-    spark.sparkContext.setLogLevel("ERROR")
-    val setupRows = warmup(spark, sfDir, "bench")
+    val sfDir = Session.sfDir
+    val spark = Session.local()
+    val setupRows = warmup(spark, sfDir, "bench", SparkEntry.queries.keys)
     System.err.println(s"[bench] setup phase (${setupRows.size} rows): ${setupRows.mkString(", ")}")
     // drop warmup garbage (and let ContextCleaner drain its queue) before
     // the measured phase starts
@@ -59,10 +27,11 @@ object Bench {
     // too) from real regressions (calibration steady, queries moved).
     // MIN of 3 runs behind the standard gc+settle boundary, at BOTH ends:
     // a single post-suite run times whatever asynchronous cleanup is still
-    // draining on top of the calibration work (r12 DragProbe: min-of-3
-    // cal is a steady ~0.07 s at every point of the sf0.1 suite — no
-    // accumulating drag anywhere; the historical 3.5× cal_last/cal_first
-    // was the single-shot transient, gone by the second run).
+    // draining on top of the calibration work (PLANS.md "Bench calibration
+    // drag": min-of-3 cal is a steady ~0.07 s at every point of the sf0.1
+    // suite — no accumulating drag anywhere; the historical 3.5×
+    // cal_last/cal_first was the single-shot transient, gone by the second
+    // run).
     def calibration(): Double = {
       import org.apache.spark.sql.functions.sum
       System.gc()
@@ -117,8 +86,8 @@ object Bench {
     // System.gc() pauses (deliberate, untimed) don't pollute the metric —
     // this number is the "queries are not GC-taxed" evidence
     var gcInQuery = 0L
-    // MIN-OF-2 per query, MIN-OF-3 for slow rows. The round-14
-    // VarianceProbe (PLANS.md) showed the FIRST run of a query at the
+    // MIN-OF-2 per query, MIN-OF-3 for slow rows. The round-14 variance
+    // measurement (PLANS.md) showed the FIRST run of a query at the
     // target SF is systematically ~1.4-2.5x its steady state (146/206
     // rows exceed 30% single-shot spread even on a quiet box — first-run
     // codegen/JIT of the target-SF plan shape and page-cache effects; the
@@ -302,8 +271,8 @@ object Bench {
     if (errors > 0) sys.exit(1)
   }
 
-  /** Warm-up and setup phase shared by Bench and VarianceProbe: touch every
-    * table at the target SF, then run every query once at the smallest SF.
+  /** Warm-up and setup phase shared by Bench and tools.Profile: touch every
+    * table at the target SF, then run each of `rows` once at the smallest SF.
     * Whole-stage codegen compiles (Janino) + JIT are per-query-shape
     * one-time costs — identical at any scale — and would otherwise
     * dominate the small/medium queries' measured time; the steady-state
@@ -318,14 +287,16 @@ object Bench {
     * indexes are built offline). Verify runs single-invocation in a fresh
     * JVM, so the correctness gate always exercises the full setup path
     * too. Returns the setup rows, in run order. */
-  def warmup(spark: SparkSession, sfDir: String, tag: String): Seq[String] =
+  def warmup(spark: SparkSession, sfDir: String, tag: String,
+      rows: Iterable[String]): Seq[String] =
     try {
       Tables.names.foreach(n => Tables.load(spark, sfDir, n).count())
       // smallest sibling SF if present, else the target itself (slower
       // warmup, same measured steady state)
       val sibling = new java.io.File(new java.io.File(sfDir).getParentFile, "sf0.001")
       val warmSf = if (sibling.isDirectory) sibling.toString else sfDir
-      val setupRows = SparkEntry.queries.toSeq.filter { case (name, fn) =>
+      val all = SparkEntry.queries
+      val setupRows = rows.toSeq.map(n => n -> all(n)).filter { case (name, fn) =>
         Artifacts.touching {
           try fn(spark, warmSf).count()
           catch { case t: Throwable =>

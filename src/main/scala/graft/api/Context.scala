@@ -216,14 +216,7 @@ object Context {
     }
   }
 
-  /** Build a context on a fresh local session (testing convenience). */
-  def local(parallelism: Int = 4): Context = {
-    val spark = SparkSession.builder()
-      .master(s"local[$parallelism]")
-      .config("spark.sql.shuffle.partitions", parallelism.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    new Context(spark)
-  }
+  /** Build a context on a local session ([[graft.Session]]). */
+  def local(parallelism: Int = graft.Session.cpus): Context =
+    new Context(graft.Session.local(parallelism))
 }

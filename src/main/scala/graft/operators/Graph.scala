@@ -234,9 +234,9 @@ object Graph {
   }
 
   /** One PageRank iteration as a LAZY plan over the loop frames — the
-    * exact unit [[pageRankFixedPoint]] materializes per iteration, shared
-    * with the plan-audit probe (tools/PrIterPlan) so committed plan
-    * evidence is produced by the production code path. `ed` is the
+    * exact unit [[pageRankFixedPoint]] materializes per iteration; the
+    * committed plan evidence (plans/r21/pagerank_iteration_*.txt) was
+    * produced from it, so it shows the production code path. `ed` is the
     * degree-annotated edge frame (src, dst, od); `ranks` is (v, r).
     *
     * The planted zero-contribution row per vertex (one shuffle per

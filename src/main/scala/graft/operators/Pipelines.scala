@@ -125,7 +125,7 @@ object Pipelines {
     // qAgg and jAgg previously each re-derived the gopherRules join in
     // their own lineage — a duplicate corpus-sized text pass), and the
     // source/text columns ride THROUGH the gopher pass instead of a
-    // corpus-sized join-back (the r21 StageCensus: that join shuffled
+    // corpus-sized join-back (OPTIMIZATION_r21.md §4: that join shuffled
     // the text twice and built the planted corpus on both sides)
     val flagged = TextAnalysis.gopherRulesCarry(corpus, idCol, textCol,
         Seq("the", "a"), Seq("source", textCol))

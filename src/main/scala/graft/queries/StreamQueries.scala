@@ -81,25 +81,13 @@ object StreamQueries {
   private[graft] val stagedEventArtifacts: Set[String] =
     Set(1, 2).map(stagedEventsName)
 
-  /** Probe access to the staged streaming source (tools/StateProbe). */
-  private[graft] def eventsStreamFor(s: SparkSession, d: String): DataFrame =
-    eventsStream(s, d)
-
   /** readStream over the staged events dir, with the same ts normalization
     * as the batch path (Tables.events): LONG nanos → micros, TIMESTAMP_NTZ
     * → TIMESTAMP (instant-exact under the pinned UTC session). Watermarks
     * require TimestampType, so every branch must land there. */
-  private def eventsStream(s: SparkSession, d: String, copies: Int = 1): DataFrame =
-    eventsStreamOver(s, d, stageEvents(d, copies))
-
-  /** [[eventsStream]] over an EXPLICIT source dir with source options —
-    * probe access (tools/StateProbe restore mode stages its own files to
-    * control batch boundaries and post-restart input). */
-  private[graft] def eventsStreamOver(
-      s: SparkSession, d: String, dir: String,
-      options: Map[String, String] = Map.empty): DataFrame = {
+  private def eventsStream(s: SparkSession, d: String, copies: Int = 1): DataFrame = {
     val schema = s.read.parquet(s"$d/events.parquet").schema
-    val raw = s.readStream.schema(schema).options(options).parquet(dir)
+    val raw = s.readStream.schema(schema).parquet(stageEvents(d, copies))
     schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))

@@ -2570,7 +2570,7 @@ object TextQueries {
     //     — same gate algebra as e02/e13: overlap@5 of the tiered ranking
     //     vs the exact brute force, plus per-probe completeness. Shortlist
     //     is 20% of the corpus; measured recall@5 is 0.66 / 0.72 / 0.71 at
-    //     sf0.001/0.01/0.1 (tools/JlProbe — the random-vector hard regime,
+    //     sf0.001/0.01/0.1 (PLANS.md e17 row — the random-vector hard regime,
     //     same as e02's), so the 0.5 floor carries ≥ 24% SF-drift margin
     //     while still failing a broken projection (shortlist-free chance
     //     overlap is ~20%). -----------------------------------------------------

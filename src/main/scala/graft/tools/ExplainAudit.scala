@@ -1,19 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.Session
 
 /** Prints formatted plans for representative queries so scan pruning,
-  * filter pushdown, and join strategies can be audited per round. */
+  * filter pushdown, and join strategies can be audited per round.
+  * Usage: scripts/run_main.sh graft.tools.ExplainAudit [sfDir [query ...]] */
 object ExplainAudit {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val sf = args.headOption.getOrElse("/root/testdata/sf0.1")
+    val spark = Session.local()
+    val sf = args.headOption.getOrElse(Session.sfDir)
     val names = if (args.length > 1) args.drop(1).toSeq
       else Seq("q19_agg", "q02_filter", "q09_join_inner", "q14_join_semi",
         "e01_knn_exact", "d06_minhash_neardup")

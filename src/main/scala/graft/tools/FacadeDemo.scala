@@ -9,8 +9,7 @@ object FacadeDemo {
   case class Person(name: String, gender: String, age: Int)
 
   def main(args: Array[String]): Unit = {
-    val context = Context.local(4)
-    context.spark.sparkContext.setLogLevel("ERROR")
+    val context = Context.local()
 
     // README flagship slice
     val df = context.range(10)

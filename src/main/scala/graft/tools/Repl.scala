@@ -22,8 +22,7 @@ object Repl {
     * entry is a single self-contained line — the autorun path feeds them to
     * the interpreter one by one, transcript-style. */
   val preamble: Seq[String] = Seq(
-    """@transient val context = graft.api.Context.local(math.min(8, Runtime.getRuntime.availableProcessors()))""",
-    """context.spark.sparkContext.setLogLevel("ERROR")""",
+    """@transient val context = graft.api.Context.local()""",
     """import graft.api._""",
     """import graft.api.types._""",
     """import org.apache.spark.sql.functions._""",

@@ -1,6 +1,6 @@
 package graft.tools
 
-import graft.{Artifacts, SparkEntry, Tables}
+import graft.{Artifacts, Session, SparkEntry, Tables}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -37,13 +37,6 @@ object ScaleSmoke {
 
   def ensureData(spark: SparkSession): Unit =
     ensureDataAt(spark, DST, TILES)
-
-  /** 100× tile dir (documents/embeddings/events tiled; relational tables
-    * untiled) — shared by the --x100 mode and SpillProbe. */
-  def ensureData100(spark: SparkSession): String = {
-    ensureDataAt(spark, "/tmp/graft_sf10", 100)
-    "/tmp/graft_sf10"
-  }
 
   private def ensureDataAt(spark: SparkSession, dst: String, tiles: Int): Unit = {
     val done = new java.io.File(s"$dst/_DONE")
@@ -657,15 +650,7 @@ object ScaleSmoke {
     EXTRA.getOrElse(n, SparkEntry.queries(n))
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "900s")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session.local()
     // --x100: tile 100× instead of 10× (linear rows only, see X100)
     val x100 = args.headOption.contains("--x100")
     val rest = if (x100) args.drop(1).toSeq else args.toSeq

@@ -35,10 +35,16 @@ object GraftPlanBridge {
   def exprOf(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
 
-  /** Unload every loaded streaming state-store provider (drops their
-    * retained state maps and maintenance work). Diagnostic/benchmark
-    * hygiene between query families — a long-lived JVM that has drained
-    * many ad-hoc streaming queries otherwise keeps every provider loaded. */
-  def unloadStateStores(): Unit =
-    execution.streaming.state.StateStore.unloadAll()
+  /** Blocks until every event posted so far has reached every listener
+    * (the bus delivers asynchronously, so a count read right after an
+    * action can miss that action's last events). */
+  def drainListeners(sc: org.apache.spark.SparkContext): Unit =
+    sc.listenerBus.waitUntilEmpty()
+
+  /** The SparkListeners registered on `sc`'s bus. */
+  def listeners(sc: org.apache.spark.SparkContext)
+      : Seq[org.apache.spark.scheduler.SparkListenerInterface] = {
+    import scala.jdk.CollectionConverters._
+    sc.listenerBus.listeners.asScala.toSeq
+  }
 }

@@ -33,7 +33,7 @@ class ExtensionsSpec extends SparkTestBase {
       // the MV rule runs from the injected optimizer batch alone: register
       // an MV through the runtime API, then STRIP the runtime install —
       // the rewrite must still fire
-      val dir = java.nio.file.Files.createTempDirectory("graft_ext")
+      val dir = Artifacts.dir("ext").toPath
       val base = dir.resolve("ext_base").toString
       val mv = dir.resolve("ext_mv").toString
       s2.range(0, 1000)

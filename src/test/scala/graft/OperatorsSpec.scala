@@ -148,7 +148,7 @@ class OperatorsSpec extends SparkTestBase {
     val batch1 = Seq(x, y, a, (4L, "solo document with nothing similar at all")).toDF("doc_id", "text")
     val batch2 = Seq(z, b).toDF("doc_id", "text")
     val union = batch1.unionByName(batch2)
-    val idx = java.nio.file.Files.createTempDirectory("sig_index").toString + "/idx"
+    val idx = Artifacts.dir("sig_index").toString + "/idx"
     val kept1 = Dedup.incrementalDedup(spark, idx, batch1, "doc_id", "text",
         threshold = 0.55, nShards = 4)
       .select("doc_id").collect().map(_.getLong(0)).toSet
@@ -169,7 +169,7 @@ class OperatorsSpec extends SparkTestBase {
   }
 
   test("incrementalDedup index upsert leaves untouched signature shards byte-identical") {
-    val idx = java.nio.file.Files.createTempDirectory("sig_index2").toString + "/idx"
+    val idx = Artifacts.dir("sig_index2").toString + "/idx"
     // batch 1 covers all 4 shards; batch 2 ids ≡ 1 (mod 4) → only shard 1
     val mk = (ids: Seq[Long]) =>
       ids.map(i => (i, s"document number $i about topic ${i % 3} with enough tokens"))
@@ -399,7 +399,7 @@ class OperatorsSpec extends SparkTestBase {
 
   test("IncrementalAgg: batched replay == one-shot; empty delta is a no-op; new keys arrive") {
     import graft.operators.IncrementalAgg
-    val state = java.nio.file.Files.createTempDirectory("aggstate").toString + "/s"
+    val state = Artifacts.dir("aggstate").toString + "/s"
     val df = spark.range(0, 300)
       .select(col("id").as("k0"), (col("id") % 3).cast("string").as("key"),
         (col("id") * 7 % 100).as("v"))
@@ -430,7 +430,7 @@ class OperatorsSpec extends SparkTestBase {
 
   test("IncrementalAgg versioned commits: crash garbage is inert; stale batchIds skip") {
     import graft.operators.IncrementalAgg
-    val state = java.nio.file.Files.createTempDirectory("aggver").toString + "/s"
+    val state = Artifacts.dir("aggver").toString + "/s"
     def snap() = IncrementalAgg.readState(spark, state)
       .collect().map(r => (r.getString(0), r.getLong(1))).sortBy(_._1).toSeq
     IncrementalAgg.refreshOnce(spark, state,
@@ -464,7 +464,7 @@ class OperatorsSpec extends SparkTestBase {
 
   test("IncrementalAgg: legacy flat-parquet state migrates, never re-bootstraps") {
     import graft.operators.IncrementalAgg
-    val state = java.nio.file.Files.createTempDirectory("agglegacy").toString + "/s"
+    val state = Artifacts.dir("agglegacy").toString + "/s"
     // fabricate the pre-versioning layout: part files at the root plus the
     // old write-then-marker scheme's replay marker at horizon 3
     Seq(("a", 2L, java.math.BigDecimal.valueOf(10.50), 7L),
@@ -519,7 +519,7 @@ class OperatorsSpec extends SparkTestBase {
     import graft.sources.Sinks
     val df = spark.range(0, 64).select(col("id").as("doc_id"),
       (col("id") * 7 % 13).as("payload"))
-    val tmp = java.nio.file.Files.createTempDirectory("shards_spec").toString
+    val tmp = Artifacts.dir("shards_spec").toString
     Sinks.writeSharded(df, tmp, "doc_id", nShards = 4)
     val back = Sinks.readSharded(spark, tmp)
     // lossless: same rows, shard = id % 4
@@ -1158,7 +1158,7 @@ class OperatorsSpec extends SparkTestBase {
   test("jlExtendIndex: batched index == rebuild; replayed batchId is a no-op") {
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf)
-    val state = java.nio.file.Files.createTempDirectory("jlinc").toString + "/s"
+    val state = Artifacts.dir("jlinc").toString + "/s"
     val cut = emb.agg(org.apache.spark.sql.functions.max(col("vec_id")))
       .head.getLong(0) / 2
     Similarity.jlExtendIndex(spark, state,
@@ -1292,7 +1292,7 @@ class OperatorsSpec extends SparkTestBase {
   test("ivfExtendIndex: batched index == rebuild; serving equal; overlap refused") {
     graft.functions.GraftFunctions.register(spark)
     val emb = Tables.embeddings(spark, sf)
-    val state = java.nio.file.Files.createTempDirectory("ivfinc").toString + "/s"
+    val state = Artifacts.dir("ivfinc").toString + "/s"
     val cut = emb.agg(org.apache.spark.sql.functions.max(col("vec_id")))
       .head.getLong(0) / 2
     val b0 = emb.filter(col("vec_id") <= cut)
@@ -2115,7 +2115,7 @@ class OperatorsSpec extends SparkTestBase {
     ).toDF("doc_id", "chunk_id", "text")
     val queries = Seq((100L, "apple"), (200L, "fig banana"),
       (300L, "grape cherry apple"), (400L, "nowhere")).toDF("qid", "qtext")
-    val dir = java.nio.file.Files.createTempDirectory("bm25ix")
+    val dir = Artifacts.dir("bm25ix").toPath
       .resolve("state").toString
     Bm25Index.extendIndex(spark, dir, corpus,
       Seq("doc_id", "chunk_id"), "text", batchId = 0L)
@@ -3292,7 +3292,7 @@ class OperatorsSpec extends SparkTestBase {
     assert(warmDelta == ranks(Graph.pageRankFixedPoint(grown, "src", "dst", 5)))
     assert(warmDelta.contains(5L))
     // reliable mode: identical ranks, and durable snapshots actually land
-    val ckdir = java.nio.file.Files.createTempDirectory("prckpt").toString
+    val ckdir = Artifacts.dir("prckpt").toString
     val rel = ranks(Graph.pageRankFixedPoint(edges, "src", "dst", 2,
       checkpointDir = Some(ckdir)))
     assert(rel == ranks(Graph.pageRankFixedPoint(edges, "src", "dst", 2)))
@@ -3320,7 +3320,7 @@ class OperatorsSpec extends SparkTestBase {
     val prior = Graph.pageRankFixedPoint(edges, "src", "dst", 30)
       .localCheckpoint(true)
     val savedDir = spark.sparkContext.getCheckpointDir
-    val ck1 = java.nio.file.Files.createTempDirectory("prhyg1").toString
+    val ck1 = Artifacts.dir("prhyg1").toString
     val warm = Graph.pageRankFixedPoint(edges, "src", "dst", 50,
       initRanks = Some(prior), tolFp = Some(1L),
       checkpointDir = Some(ck1))
@@ -3339,7 +3339,7 @@ class OperatorsSpec extends SparkTestBase {
     assert(ranks(warm) == c30)
     // fixed-budget hygiene: k iterations keep exactly the k-th snapshot —
     // a 50-iteration production run holds ONE vector of disk, not fifty
-    val ck2 = java.nio.file.Files.createTempDirectory("prhyg2").toString
+    val ck2 = Artifacts.dir("prhyg2").toString
     Graph.pageRankFixedPoint(edges, "src", "dst", 3,
       checkpointDir = Some(ck2)).count()
     val priv2 = new java.io.File(ck2).listFiles()

@@ -122,7 +122,7 @@ class PlansSpec extends SparkTestBase {
     val index = Similarity.chunkIndex(
       docs.filter(pmod(col("doc_id"), lit(101)) =!= 5), "doc_id", "text")
     val cents = Similarity.chunkIvfCentroidsCollected(index, nCells = 4)
-    val dir = java.nio.file.Files.createTempDirectory("e27plan")
+    val dir = Artifacts.dir("e27plan").toPath
       .resolve("index").toString
     Similarity.chunkIvfIndex(index, cents)
       .write.mode("overwrite").partitionBy("cell_id").parquet(dir)
@@ -157,7 +157,7 @@ class PlansSpec extends SparkTestBase {
       .chunkTokens(docs.filter(pmod(col("doc_id"), lit(101)) =!= 5),
         "doc_id", "text", 16, 0)
       .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-    val state = java.nio.file.Files.createTempDirectory("e30plan")
+    val state = Artifacts.dir("e30plan").toPath
       .resolve("state").toString
     Bm25Index.extendIndex(spark, state, chunks,
       Seq("doc_id", "chunk_id"), "chunk_text", batchId = 0L)
@@ -201,7 +201,7 @@ class PlansSpec extends SparkTestBase {
       .chunkTokens(docs.filter(pmod(col("doc_id"), lit(101)) =!= 5),
         "doc_id", "text", 16, 0)
       .select(col("doc_id"), col("chunk_id"), col("chunk_text"))
-    val base = java.nio.file.Files.createTempDirectory("e39plan")
+    val base = Artifacts.dir("e39plan").toPath
     val state = base.resolve("state").toString
     val cache = base.resolve("qcache").toString
     Bm25Index.extendIndex(spark, state, chunks,
@@ -459,7 +459,7 @@ class PlansSpec extends SparkTestBase {
 
   test("MV lattice navigation is by MEASURED bytes: a finer-but-smaller MV beats a coarse-but-wide one") {
     import org.apache.spark.sql.functions.{concat, concat_ws, max, md5, sequence, sum => fsum, transform => ftransform}
-    val dir = java.nio.file.Files.createTempDirectory("mvcost")
+    val dir = Artifacts.dir("mvcost").toPath
     val factPath = dir.resolve("fact").toString
     // fact: g2 refines g1; bigstr is ~64 KB of incompressible hex per row
     spark.range(0, 2000)
@@ -692,7 +692,7 @@ class PlansSpec extends SparkTestBase {
 
   test("q95 (compaction): exactly one shuffle, sized by the planned output files") {
     import graft.sources.Sinks
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cplan").toString
+    val tmp = Artifacts.dir("cplan").toString
     Tables.events(spark, sf)
       .withColumn("dt", org.apache.spark.sql.functions.to_date(col("ts")))
       .repartition(8)

@@ -3,7 +3,6 @@ package graft
 import graft.operators.Skew
 import org.apache.spark.sql.functions._
 
-import java.nio.file.Files
 
 /** Skew-mitigation helpers + source/sink round-trips (the reference has no
   * I/O at all — SURVEY §2.3; parquet/csv/json come with Spark, verified
@@ -38,7 +37,7 @@ class SkewAndIOSpec extends SparkTestBase {
   }
 
   test("parquet/csv/json round-trips preserve data") {
-    val dir = Files.createTempDirectory("graft_io").toString
+    val dir = Artifacts.dir("io").toString
     val src = Tables.nation(spark, sf)
     src.write.mode("overwrite").parquet(s"$dir/n.parquet")
     src.write.mode("overwrite").option("header", "true").csv(s"$dir/n.csv")
@@ -83,7 +82,7 @@ class SkewAndIOSpec extends SparkTestBase {
   }
 
   test("partitioned parquet write prunes partitions on read") {
-    val dir = Files.createTempDirectory("graft_part").toString
+    val dir = Artifacts.dir("part").toString
     Tables.orders(spark, sf)
       .withColumn("status", col("o_orderstatus"))
       .write.mode("overwrite").partitionBy("status").parquet(s"$dir/orders")

@@ -15,7 +15,7 @@ class SourcesSpec extends SparkTestBase {
     .select($"doc_id", $"lang", $"n_chars")
 
   test("binaryFile source: arbitrary bytes read back exactly, glob filters apply") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_bin")
+    val tmp = Artifacts.dir("bin").toPath
     val payload = Array.tabulate[Byte](256)(i => i.toByte) // every byte value
     java.nio.file.Files.write(tmp.resolve("a.bin"), payload)
     java.nio.file.Files.write(tmp.resolve("skip.txt"), "not binary".getBytes)
@@ -28,7 +28,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("xml roundtrip: markup-significant characters escape and restore byte-exact") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_xml").toString
+    val tmp = Artifacts.dir("xml").toString
     val rows = Seq(
       (1L, "a < b & c > d"),
       (2L, "quotes \" and ' inside"),
@@ -43,7 +43,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("schema evolution: mergeSchema unifies vintages, old rows null-fill the new column") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val tmp = Artifacts.dir("evo").toString
     docs.filter($"doc_id" % 2 === 0).select($"doc_id", $"n_chars")
       .write.mode("overwrite").parquet(tmp)
     docs.filter($"doc_id" % 2 === 1).select($"doc_id", $"n_chars", $"lang")
@@ -65,7 +65,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("csv roundtrip with explicit schema preserves rows and types") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_csv").toString
+    val tmp = Artifacts.dir("csv").toString
     docs.write.mode("overwrite").option("header", "true").csv(tmp)
     val back = spark.read.option("header", "true").schema(docs.schema).csv(tmp)
     assert(back.schema == docs.schema)
@@ -74,7 +74,7 @@ class SourcesSpec extends SparkTestBase {
   }
 
   test("json roundtrip with explicit schema preserves rows and types") {
-    val tmp = java.nio.file.Files.createTempDirectory("graft_json").toString
+    val tmp = Artifacts.dir("json").toString
     docs.write.mode("overwrite").json(tmp)
     val back = spark.read.schema(docs.schema).json(tmp)
     assert(back.schema == docs.schema)
@@ -85,7 +85,7 @@ class SourcesSpec extends SparkTestBase {
     import graft.sources.Sinks
     val df = spark.range(0, 64).select(col("id").as("doc_id"),
       (col("id") * 7 % 13).as("payload"))
-    val tmp = java.nio.file.Files.createTempDirectory("shards_upsert").toString
+    val tmp = Artifacts.dir("shards_upsert").toString
     Sinks.writeSharded(df, tmp, "doc_id", nShards = 4)
     def files(shard: Int): Set[(String, Long)] =
       new java.io.File(tmp, s"shard=$shard").listFiles()
@@ -112,7 +112,7 @@ class SourcesSpec extends SparkTestBase {
   test("writeRangeSharded + readRangePruned: pruned scan reads fewer files, same rows") {
     import graft.sources.Sinks
     val bounds = Seq(150L, 250L, 350L, 450L)
-    val tmp = java.nio.file.Files.createTempDirectory("range_shards").toString
+    val tmp = Artifacts.dir("range_shards").toString
     Sinks.writeRangeSharded(docs, tmp, "n_chars", bounds)
     // shard assignment: every row sits in the shard its value maps to
     val all = Sinks.readSharded(spark, tmp)
@@ -141,7 +141,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("z-order layout: either dimension prunes to 2^bits of 4^bits dirs; rows exact") {
     import graft.sources.Sinks
-    val tmp = java.nio.file.Files.createTempDirectory("zorder").toString
+    val tmp = Artifacts.dir("zorder").toString
     // 2 interleaved dims, 3 bits each -> 64 dirs; docs fixture has
     // lang + n_chars
     val langIdx = (array_position(
@@ -183,7 +183,7 @@ class SourcesSpec extends SparkTestBase {
   test("parquet schema evolution: mergeSchema unions vintages, old rows null-extend") {
     // a long-lived 100 TB table accretes columns; readers must union the
     // schemas across file vintages without rewriting history
-    val tmp = java.nio.file.Files.createTempDirectory("graft_evo").toString
+    val tmp = Artifacts.dir("evo").toString
     docs.select($"doc_id", $"lang").limit(10)
       .write.parquet(s"$tmp/batch=1")
     docs.select($"doc_id", $"lang", $"n_chars").limit(10)
@@ -200,7 +200,7 @@ class SourcesSpec extends SparkTestBase {
     // raw-feed ingestion contract: a malformed line must neither kill the
     // job nor silently vanish — PERMISSIVE lands it in _corrupt_record for
     // a quarantine sink; DROPMALFORMED is the explicit discard mode
-    val tmp = java.nio.file.Files.createTempDirectory("graft_json")
+    val tmp = Artifacts.dir("json").toPath
     java.nio.file.Files.writeString(tmp.resolve("feed.json"),
       """{"id": 1, "v": "ok"}
         |{"id": 2 BROKEN
@@ -230,7 +230,7 @@ class SourcesSpec extends SparkTestBase {
     // batch re-lands its own partition and must not touch (or drop) the
     // other days — partitionOverwriteMode=dynamic, the exactly-once-style
     // backfill every event lake relies on
-    val tmp = java.nio.file.Files.createTempDirectory("graft_dpo").toString
+    val tmp = Artifacts.dir("dpo").toString
     val ev = Tables.events(spark, sf)
       .withColumn("dt", to_date(col("ts")))
       .select(col("event_id"), col("user_id"), col("value"), col("dt"))
@@ -269,8 +269,8 @@ class SourcesSpec extends SparkTestBase {
 
   test("compactTo: bin-packs per directory to ceil(bytes/target), content exact") {
     import graft.sources.Sinks
-    val src = java.nio.file.Files.createTempDirectory("graft_cmp_src").toString
-    val dst = java.nio.file.Files.createTempDirectory("graft_cmp_dst").toString
+    val src = Artifacts.dir("cmp_src").toString
+    val dst = Artifacts.dir("cmp_dst").toString
     val ev = Tables.events(spark, sf)
       .withColumn("dt", to_date(col("ts")))
       .select(col("event_id"), col("user_id"), col("value"), col("dt"))
@@ -287,7 +287,7 @@ class SourcesSpec extends SparkTestBase {
     assert(one.values.forall(_._1 == 1), s"expected 1 file/dir, got $one")
     // small target → per-dir count bounded by the bin-pack plan (hash
     // collisions may merge buckets — fewer/larger is the allowed direction)
-    val dst2 = java.nio.file.Files.createTempDirectory("graft_cmp_dst2").toString
+    val dst2 = Artifacts.dir("cmp_dst2").toString
     val target = 16L << 10
     Sinks.compactTo(spark, src, dst2, "dt", keyCol = "event_id", target)
     val packed = Sinks.fileStats(spark, dst2)
@@ -309,7 +309,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("compactDirsInPlace: only named days rewritten, cold dirs byte-stable") {
     import graft.sources.Sinks
-    val tmp = java.nio.file.Files.createTempDirectory("graft_cmp_ip").toString
+    val tmp = Artifacts.dir("cmp_ip").toString
     val ev = Tables.events(spark, sf)
       .withColumn("dt", to_date(col("ts")))
       .select(col("event_id"), col("user_id"), col("value"), col("dt"))
@@ -339,8 +339,8 @@ class SourcesSpec extends SparkTestBase {
   test("bucketed tables: co-located equi-join plans without a shuffle exchange") {
     val left = spark.range(0, 1000).select($"id".as("k"), ($"id" * 3).as("a"))
     val right = spark.range(0, 1000).select($"id".as("k"), ($"id" % 7).as("b"))
-    val d1 = java.nio.file.Files.createTempDirectory("graft_b1").toString
-    val d2 = java.nio.file.Files.createTempDirectory("graft_b2").toString
+    val d1 = Artifacts.dir("b1").toString
+    val d2 = Artifacts.dir("b2").toString
     left.write.mode("overwrite").bucketBy(8, "k").sortBy("k")
       .option("path", d1).saveAsTable("graft_bl")
     right.write.mode("overwrite").bucketBy(8, "k").sortBy("k")
@@ -377,7 +377,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("writeTrainingShards: budget respected; resume from a partial manifest is idempotent") {
     import graft.sources.Sinks
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tshards").toString
+    val tmp = Artifacts.dir("tshards").toString
     val input = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text")
     val B = 2048L
@@ -430,7 +430,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("writeTrainingShards: resume fingerprint guards budget and input drift") {
     import graft.sources.Sinks
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tsguard").toString
+    val tmp = Artifacts.dir("tsguard").toString
     val input = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text")
     Sinks.writeTrainingShards(spark, input, tmp, "doc_id", "text", 2048L)
@@ -454,7 +454,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("appendTrainingShards: recorded shards frozen; new docs land once in new shards") {
     import graft.sources.Sinks
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tsappend").toString
+    val tmp = Artifacts.dir("tsappend").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text")
     val t = docs.agg(expr("max(doc_id) div 2")).head.getLong(0)
@@ -519,7 +519,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("append/rebuild guards: appended exports refuse full-rebuild resume and stale-_meta retries") {
     import graft.sources.Sinks
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tsguard2").toString
+    val tmp = Artifacts.dir("tsguard2").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text")
     val t = docs.agg(expr("max(doc_id) div 2")).head.getLong(0)
@@ -567,7 +567,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("repairTrainingShardManifest: sidecars rebuild from shard data; append continues") {
     import graft.sources.Sinks
-    val tmp = java.nio.file.Files.createTempDirectory("graft_tsrepair").toString
+    val tmp = Artifacts.dir("tsrepair").toString
     val docs = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text")
     val t = docs.agg(expr("max(doc_id) div 2")).head.getLong(0)
@@ -597,7 +597,7 @@ class SourcesSpec extends SparkTestBase {
 
   test("training-shard export works against an explicit file:/ URI (hadoop-fs paths)") {
     import graft.sources.Sinks
-    val dir = java.nio.file.Files.createTempDirectory("graft_tsuri")
+    val dir = Artifacts.dir("tsuri").toPath
     val uri = dir.toUri.toString.stripSuffix("/") // file:///tmp/...
     val input = spark.read.parquet(s"$sf/documents.parquet")
       .select($"doc_id", $"text").limit(50)

@@ -4,20 +4,11 @@ import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared local session for all suites (sbt forks one test JVM; getOrCreate
-  * reuses the session across suites). Mirrors the Verify/Bench configs. */
+  * reuses the session across suites): the Bench/Verify settings
+  * ([[Session]]) on a fixed 4 slots, so results do not depend on the box. */
 trait SparkTestBase extends AnyFunSuite {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft_wh").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
+    val s = Session.local(4)
     graft.functions.GraftFunctions.register(s)
     s
   }

@@ -209,7 +209,7 @@ class StreamingSpec extends SparkTestBase {
     // the real pipeline shape: stream the driver-generated parquet through
     // the same event-time aggregation the batch path uses
     // the file stream source lists a directory; stage the single test file
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
+    val dir = Artifacts.dir("events_stream").toPath
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
@@ -290,7 +290,7 @@ class StreamingSpec extends SparkTestBase {
   test("ingestSharded: micro-batches upsert the sharded layout, updates win, shards stay addressable") {
     import graft.sources.Sinks
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("ingest_shards")
+    val dir = Artifacts.dir("ingest_shards").toPath
     val path = dir.resolve("data").toString
     val ckpt = dir.resolve("ckpt").toString
     val input = MemoryStream[(Long, String)]
@@ -316,7 +316,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("aggMaintain: micro-batches maintain the MV; a replayed batchId merges once") {
     implicit val sqlCtx = spark.sqlContext
-    val dir = java.nio.file.Files.createTempDirectory("mv_state")
+    val dir = Artifacts.dir("mv_state").toPath
     val path = dir.resolve("state").toString
     val ckpt = dir.resolve("ckpt").toString
     val input = MemoryStream[(String, Long)]
@@ -343,7 +343,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("mvMaintain: MV keeps serving the join-back BETWEEN micro-batches") {
-    val dir = java.nio.file.Files.createTempDirectory("mvserve")
+    val dir = Artifacts.dir("mvserve").toPath
     val statePath = dir.resolve("state").toString
     val ckpt = dir.resolve("ckpt").toString
     // the fact TABLE is the stream's source dir: every ingested file is
@@ -409,7 +409,7 @@ class StreamingSpec extends SparkTestBase {
   test("incrementalDedupOnce: batched kept == full greedy; replayed batchId is a no-op") {
     import graft.operators.Dedup
     graft.functions.GraftFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("sdedup")
+    val dir = Artifacts.dir("sdedup").toPath
     val state = dir.resolve("state").toString
     val out = dir.resolve("out").toString
     // near-dups across the batch boundary: 2 ≈ 1 (lives in batch 0),
@@ -445,7 +445,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("domainCapOnce: cross-batch cap == arrival-order cap; crash+replay safe") {
     import graft.operators.UrlCuration
-    val dir = java.nio.file.Files.createTempDirectory("domcap")
+    val dir = Artifacts.dir("domcap").toPath
     val state = dir.resolve("state").toString
     val out = dir.resolve("out").toString
     def urls(ids: Seq[Long], host: Long => String) =
@@ -497,7 +497,7 @@ class StreamingSpec extends SparkTestBase {
   test("decontamGate: total disjoint routing == batch decontaminate; replay idempotent") {
     import graft.operators.{Contamination, Dedup}
     graft.functions.GraftFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("decontam")
+    val dir = Artifacts.dir("decontam").toPath
     val srcDir = dir.resolve("src").toString
     new java.io.File(srcDir).mkdirs()
     val leak = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
@@ -549,7 +549,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("routeBinary: disjoint total routing; replay overwrites, never duplicates") {
-    val dir = java.nio.file.Files.createTempDirectory("route")
+    val dir = Artifacts.dir("route").toPath
     val srcDir = dir.resolve("src").toString
     new java.io.File(srcDir).mkdirs()
     def land(rows: Seq[(Long, Long)], name: String): Unit = {
@@ -595,7 +595,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("transformIngest: streamed bundle == batch bundle; fresh-checkpoint replay idempotent") {
     graft.functions.GraftFunctions.register(spark)
-    val dir = java.nio.file.Files.createTempDirectory("tingest")
+    val dir = Artifacts.dir("tingest").toPath
     val srcDir = dir.resolve("src").toString
     new java.io.File(srcDir).mkdirs()
     def land(rows: Seq[(Long, String)], name: String): Unit = {
@@ -640,7 +640,7 @@ class StreamingSpec extends SparkTestBase {
   test("streamed chunk index: maintained index equals full rebuild; served retrieval equals batch") {
     graft.functions.GraftFunctions.register(spark)
     import graft.operators.Similarity
-    val dir = java.nio.file.Files.createTempDirectory("cidx")
+    val dir = Artifacts.dir("cidx").toPath
     val srcDir = dir.resolve("src").toString
     new java.io.File(srcDir).mkdirs()
     def land(rows: Seq[(Long, String)], name: String): Unit = {
@@ -732,7 +732,7 @@ class StreamingSpec extends SparkTestBase {
   test("bm25 posting index: maintained state equals rebuild; replay no-op; served equals recompute") {
     graft.functions.GraftFunctions.register(spark)
     import graft.operators.{Bm25Index, IncrementalAgg, TextAnalysis}
-    val dir = java.nio.file.Files.createTempDirectory("bm25state")
+    val dir = Artifacts.dir("bm25state").toPath
     val b0 = Seq((1L, "apple banana apple"), (2L, "banana cherry"))
       .toDF("doc_id", "text")
     val b1 = Seq((3L, "apple fig cherry banana"), (4L, "durian fig"))
@@ -812,7 +812,7 @@ class StreamingSpec extends SparkTestBase {
   test("append commits are O(delta): prior segments untouched; retraction O(deletes); compaction ≡ eager rewrite") {
     graft.functions.GraftFunctions.register(spark)
     import graft.operators.{Bm25Index, IncrementalAgg}
-    val dir = java.nio.file.Files.createTempDirectory("bm25seg")
+    val dir = Artifacts.dir("bm25seg").toPath
     val state = dir.resolve("state").toString
     val b0 = Seq((1L, "apple banana apple"), (2L, "banana cherry"))
       .toDF("doc_id", "text")
@@ -926,7 +926,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("append-commit crash window: an orphan segment is reader-invisible and swept by the next commit") {
     import graft.operators.IncrementalAgg
-    val dir = java.nio.file.Files.createTempDirectory("segcrash")
+    val dir = Artifacts.dir("segcrash").toPath
     val state = dir.resolve("state").toString
     IncrementalAgg.appendOnce(spark, state,
       Seq((1L, "a"), (2L, "b")).toDF("id", "payload"), 0L, "id")
@@ -965,7 +965,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("readStatePartRanged: committed id ranges prune to intersecting segments; tombstones still apply") {
     import graft.operators.IncrementalAgg
-    val dir = java.nio.file.Files.createTempDirectory("ranged")
+    val dir = Artifacts.dir("ranged").toPath
     val state = dir.resolve("state").toString
     IncrementalAgg.appendOnce(spark, state,
       (1L to 10L).map(i => (i, s"p$i")).toDF("id", "payload"), 0L, "id")
@@ -988,7 +988,7 @@ class StreamingSpec extends SparkTestBase {
   test("query-result cache: cached ≡ direct; partial batches mix; index maintenance invalidates by version") {
     graft.functions.GraftFunctions.register(spark)
     import graft.operators.{Bm25Index, IncrementalAgg}
-    val dir = java.nio.file.Files.createTempDirectory("bm25qc")
+    val dir = Artifacts.dir("bm25qc").toPath
     val state = dir.resolve("state").toString
     val cache = dir.resolve("cache").toString
     Bm25Index.extendIndex(spark, state,
@@ -1029,7 +1029,7 @@ class StreamingSpec extends SparkTestBase {
 
   test("bm25 index predating items bookkeeping raises a rebuild-required error") {
     import graft.operators.Bm25Index
-    val dir = java.nio.file.Files.createTempDirectory("bm25legacy")
+    val dir = Artifacts.dir("bm25legacy").toPath
     val state = dir.resolve("state").toString
     // hand-build a legacy three-part rewrite-protocol version (no items)
     Seq(("apple", 1L)).toDF("term", "df").write.parquet(s"$state/v0/terms")
@@ -1144,7 +1144,7 @@ class StreamingSpec extends SparkTestBase {
   test("streamed datasheet: maintained card equals batch card, replayed batchId no-op") {
     implicit val sqlCtx = spark.sqlContext
     import graft.operators.TextAnalysis
-    val dir = java.nio.file.Files.createTempDirectory("dsheet")
+    val dir = Artifacts.dir("dsheet").toPath
     val state = dir.resolve("state").toString
     val ckpt = dir.resolve("ckpt").toString
     val rollups = Map("n_docs" -> "sum", "n_tokens" -> "sum",
@@ -1183,7 +1183,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.kllQuantile
-    val dir = java.nio.file.Files.createTempDirectory("sk_state")
+    val dir = Artifacts.dir("sk_state").toPath
     val path = dir.resolve("state").toString
     val ckpt = dir.resolve("ckpt").toString
     val input = MemoryStream[(String, Double)]
@@ -1216,7 +1216,7 @@ class StreamingSpec extends SparkTestBase {
     implicit val sqlCtx = spark.sqlContext
     graft.functions.GraftFunctions.register(spark)
     import graft.functions.GraftFunctions.{freqItems, freqMaxError}
-    val dir = java.nio.file.Files.createTempDirectory("fh_state")
+    val dir = Artifacts.dir("fh_state").toPath
     val path = dir.resolve("state").toString
     val ckpt = dir.resolve("ckpt").toString
     val input = MemoryStream[(String, String)]
@@ -1246,7 +1246,7 @@ class StreamingSpec extends SparkTestBase {
     // data keeps landing, a fresh query starts from the SAME checkpoint —
     // it must pick up only the unread files, so the maintained state equals
     // the one-shot aggregate with nothing double-counted
-    val root = java.nio.file.Files.createTempDirectory("restart")
+    val root = Artifacts.dir("restart").toPath
     val src = root.resolve("src"); java.nio.file.Files.createDirectory(src)
     val path = root.resolve("state").toString
     val ckpt = root.resolve("ckpt").toString
@@ -1271,7 +1271,7 @@ class StreamingSpec extends SparkTestBase {
     // the scheduled-batch pattern behind s12: each launch paces through
     // pending files (maxFilesPerTrigger per batch), stops on its own, and
     // the next launch resumes from the checkpoint — nothing recounted
-    val root = java.nio.file.Files.createTempDirectory("an")
+    val root = Artifacts.dir("an").toPath
     val src = root.resolve("src"); java.nio.file.Files.createDirectory(src)
     val out = root.resolve("out").toString
     val ckpt = root.resolve("ckpt").toString
@@ -1311,7 +1311,7 @@ class StreamingSpec extends SparkTestBase {
       (3L, "apple cherry")).toDF("doc_id", "text")
     // build a real index, then RECONSTRUCT it in the pre-manifest rewrite
     // layout: all four parts as plain parquet dirs under v0, no manifest
-    val dir = java.nio.file.Files.createTempDirectory("bm25legacytomb")
+    val dir = Artifacts.dir("bm25legacytomb").toPath
     val modern = dir.resolve("modern").toString
     Bm25Index.extendIndex(spark, modern, docs, Seq("doc_id"), "text", 0L)
     val legacy = dir.resolve("legacy").toString
@@ -1353,7 +1353,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("partial legacy migration: a later first append to a carried-forward part keeps its prior rows") {
-    val dir = java.nio.file.Files.createTempDirectory("legacypartial")
+    val dir = Artifacts.dir("legacypartial").toPath
     val state = dir.resolve("state").toString
     // legacy layout: TWO data parts as plain version-dir parquet (no
     // manifest)
@@ -1384,7 +1384,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("single-writer contract: a version committed mid-commit raises instead of clobbering") {
-    val dir = java.nio.file.Files.createTempDirectory("drift")
+    val dir = Artifacts.dir("drift").toPath
     val state = dir.resolve("state").toString
     IncrementalAgg.appendOnce(spark, state,
       Seq((1L, "a")).toDF("id", "p"), 0L, "id")
@@ -1430,7 +1430,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("absolute tombstone triggers: row/byte bounds fire where the fraction cannot; reads invariant") {
-    val dir = java.nio.file.Files.createTempDirectory("abstrig")
+    val dir = Artifacts.dir("abstrig").toPath
     val state = dir.resolve("state").toString
     IncrementalAgg.appendOnce(spark, state,
       (1L to 200L).map(i => (i, s"p$i")).toDF("id", "p"), 0L, "id")
@@ -1459,7 +1459,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("segment-count compaction: bounded manifest over a long append stream; folds read-invisible; tiering never rewrites large folds") {
-    val dir = java.nio.file.Files.createTempDirectory("segfold")
+    val dir = Artifacts.dir("segfold").toPath
     val state = dir.resolve("state").toString
     val part = IncrementalAgg.RowsPart
     var expect = Vector.empty[Long]
@@ -1514,7 +1514,7 @@ class StreamingSpec extends SparkTestBase {
   test("tombstone-segment folding: a long takedown stream's per-batch tombstone segments fold, reads unchanged") {
     graft.functions.GraftFunctions.register(spark)
     import graft.operators.Bm25Index
-    val dir = java.nio.file.Files.createTempDirectory("tombfold")
+    val dir = Artifacts.dir("tombfold").toPath
     val state = dir.resolve("state").toString
     Bm25Index.extendIndex(spark, state,
       (1L to 60L).map(i => (i, s"w$i apple w${i % 7}"))
@@ -1558,7 +1558,7 @@ class StreamingSpec extends SparkTestBase {
   test("cache maintenance: stale-salt entries evicted, live entries still hit with zero recompute commits") {
     graft.functions.GraftFunctions.register(spark)
     import graft.operators.{Bm25Index, IncrementalAgg}
-    val dir = java.nio.file.Files.createTempDirectory("cachemaint")
+    val dir = Artifacts.dir("cachemaint").toPath
     val state = dir.resolve("state").toString
     val cache = dir.resolve("cache").toString
     Bm25Index.extendIndex(spark, state,
@@ -1618,7 +1618,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("commit lease: a held lock raises before any rename; stale leases break by age") {
-    val dir = java.nio.file.Files.createTempDirectory("lease")
+    val dir = Artifacts.dir("lease").toPath
     val state = dir.resolve("state").toString
     IncrementalAgg.appendOnce(spark, state,
       Seq((1L, "a")).toDF("id", "p"), 0L, "id")
@@ -1654,7 +1654,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("version retention: a reader bound to the previous version survives the next commit; storage stays bounded") {
-    val dir = java.nio.file.Files.createTempDirectory("retain")
+    val dir = Artifacts.dir("retain").toPath
     val state = dir.resolve("state").toString
     IncrementalAgg.appendOnce(spark, state,
       (1L to 5L).map(i => (i, s"p$i")).toDF("id", "p"), 0L, "id")
@@ -1699,7 +1699,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("default absolute trigger: an untuned takedown schedule folds at the broadcast ceiling") {
-    val dir = java.nio.file.Files.createTempDirectory("deftrig")
+    val dir = Artifacts.dir("deftrig").toPath
     val state = dir.resolve("state").toString
     IncrementalAgg.appendOnce(spark, state,
       (1L to 10L).map(i => (i, s"p$i")).toDF("id", "p"), 0L, "id")
@@ -1723,7 +1723,7 @@ class StreamingSpec extends SparkTestBase {
   }
 
   test("manifest-level fold: a stream of no-op takedowns cannot grow the manifest unboundedly") {
-    val dir = java.nio.file.Files.createTempDirectory("noopfold")
+    val dir = Artifacts.dir("noopfold").toPath
     val state = dir.resolve("state").toString
     IncrementalAgg.appendOnce(spark, state,
       (1L to 5L).map(i => (i, s"p$i")).toDF("id", "p"), 0L, "id")
