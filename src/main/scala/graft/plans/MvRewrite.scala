@@ -146,13 +146,10 @@ object MvRewrite extends Rule[LogicalPlan] {
     case _ => None
   }
 
-  private val debug = sys.env.contains("GRAFT_MV_DEBUG")
-
   private def rewrite(
       groupings: Seq[Expression], aggExprs: Seq[NamedExpression],
       child: LogicalPlan): Option[LogicalPlan] = {
     val scan = scanOf(child)
-    if (debug) println(s"[mv] scan=${scan.map(_._1.simpleString(80))} path=${scan.flatMap(s => pathOf(s._1))} registry=${registry.keySet()}")
     scan match {
       case Some((lr, filters)) =>
         val defs =
@@ -243,9 +240,7 @@ object MvRewrite extends Rule[LogicalPlan] {
         factKeys += b; joinConjs += eq
       case c if c.references.subsetOf(dimAttrs) => joinConjs += c
       case c if c.references.subsetOf(factAttrs) => factConjs += c
-      case other =>
-        if (debug) println(s"[mv] join-back: unservable conjunct $other")
-        return None
+      case _ => return None
     }
     val factFilters = scanFilters ++ factConjs.toSeq
     // same measured-bytes lattice navigation as the scan path
@@ -277,9 +272,7 @@ object MvRewrite extends Rule[LogicalPlan] {
       case a: AttributeReference if isFact(a) && mv.groupCols(a.name) =>
         byName(a.name)
       case a: AttributeReference if dimAttrs.contains(a) => a
-      case g =>
-        if (debug) println(s"[mv] join-back grouping disqualifies: $g")
-        return None
+      case _ => return None
     }
 
     def reagg(ae: AggregateExpression): Option[Expression] =
@@ -310,22 +303,16 @@ object MvRewrite extends Rule[LogicalPlan] {
               case Some(e) =>
                 e.foreach { case x: AggregateExpression => inserted.add(x); () case _ => }
                 e
-              case None =>
-                if (debug) println(s"[mv] join-back: no measure for ${ae.aggregateFunction.sql(isDistinct = false)}")
-                ok = false; ae
+              case None => ok = false; ae
             }
           case a: AttributeReference if isFact(a) =>
             byName.get(a.name) match {
               case Some(m) if mv.groupCols(a.name) => m
-              case _ =>
-                if (debug) println(s"[mv] join-back: unmapped fact attr $a")
-                ok = false; a
+              case _ => ok = false; a
             }
         }
         Alias(newBody, name)(exprId = al.exprId)
-      case other =>
-        if (debug) println(s"[mv] join-back aggExpr disqualifies: $other")
-        ok = false; aggExprs.head
+      case _ => ok = false; aggExprs.head
     }
     if (!ok) return None
 
@@ -363,10 +350,8 @@ object MvRewrite extends Rule[LogicalPlan] {
           c.references.subsetOf(scope) && !c.references.subsetOf(accOut))
       }
       pick match {
-        case None =>
-          if (debug) println(
-            "[mv] join-back: no dim binds a conjunct (bushy/cross source) — skipping rewrite")
-          return None
+        // no dim binds a conjunct (bushy/cross source): skip the rewrite
+        case None => return None
         case Some(dim) =>
           val scope = accOut ++ dim.outputSet
           val (now, later) = remaining.partition(_.references.subsetOf(scope))
@@ -387,16 +372,11 @@ object MvRewrite extends Rule[LogicalPlan] {
   private def rewriteWith(
       mv: MvDef, groupings: Seq[Expression], aggExprs: Seq[NamedExpression],
       filters: Seq[Expression]): Option[LogicalPlan] = {
-    if (debug) println(s"[mv] trying ${mv.mvPath} (${mv.groupCols.size} group cols); measures=${mv.measures.keySet} aggKeys=${aggExprs.flatMap(_.collect { case ae: AggregateExpression => ae.aggregateFunction.sql(isDistinct = false) })}")
-
     val groupAttrs = groupings.map {
       case a: AttributeReference if mv.groupCols(a.name) => a
-      case g => if (debug) println(s"[mv] grouping disqualifies: $g"); return None
+      case _ => return None
     }
-    if (!filters.forall(_.references.forall(r => mv.groupCols(r.name)))) {
-      if (debug) println(s"[mv] filter disqualifies: $filters")
-      return None
-    }
+    if (!filters.forall(_.references.forall(r => mv.groupCols(r.name)))) return None
 
     val rel = mv.mvRel.newInstance()
     val byName = rel.output.map(a => a.name -> a).toMap
@@ -437,18 +417,16 @@ object MvRewrite extends Rule[LogicalPlan] {
               case Some(e) =>
                 e.foreach { case x: AggregateExpression => inserted.add(x); () case _ => }
                 e
-              case None =>
-                if (debug) println(s"[mv] no measure for: ${ae.aggregateFunction.sql(isDistinct = false)}")
-                ok = false; ae
+              case None => ok = false; ae
             }
           case a: AttributeReference =>
             byName.get(a.name) match {
               case Some(m) => m
-              case None    => if (debug) println(s"[mv] unmapped attr: $a"); ok = false; a
+              case None    => ok = false; a
             }
         }
         Alias(newBody, name)(exprId = al.exprId)
-      case other => if (debug) println(s"[mv] aggExpr disqualifies: $other"); ok = false; aggExprs.head
+      case _ => ok = false; aggExprs.head
     }
     if (!ok) return None
 
