@@ -5,17 +5,20 @@ import scala.jdk.CollectionConverters._
 
 import graft.{Bench, Session, SparkEntry, Verify}
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.{GraftPlanBridge, SparkSession}
+import org.apache.spark.sql.{DataFrame, GraftPlanBridge, SparkSession}
 import org.apache.spark.sql.streaming.StreamingQueryListener
 
-/** Times and profiles SparkEntry rows the way Bench measures them: warm-up
-  * and setup phase through [[Bench.warmup]], then a gc+settle boundary
-  * before every timed rep (without it the previous rep's async block
-  * release steals cores from the next rep and the spread swamps real
-  * deltas). Prints one JSON line per row: the rep times, and what one
-  * SparkListener and one StreamingQueryListener saw in the fastest rep —
-  * jobs, stages and tasks; summed and max task ms with the top stages;
-  * shuffle read/write and spill bytes; each streaming batch's durationMs.
+/** The one row runner: [[run]] is the one place a row executes, and
+  * [[profile]] times the reps of Bench, its 10× panel, ScaleSmoke and this
+  * main, each behind a gc+settle boundary (without it the previous rep's
+  * async block release steals cores from the next rep and the spread
+  * swamps real deltas). The main runs the warm-up and setup phase through
+  * [[Bench.warmup]], then prints one JSON line per row — the lines Bench
+  * writes to BENCH_profile.json: the successful rep times, the first
+  * failure's message, and what one SparkListener and one
+  * StreamingQueryListener saw in the fastest rep — jobs, stages and tasks;
+  * summed and max task ms with the top stages; shuffle read/write and spill
+  * bytes; GC ms; each streaming batch's durationMs.
   *
   * `--ab key=v1|v2[|...]` alternates a runtime SQL conf per rep within one
   * JVM, the strongest control for box noise, and prints one line per row
@@ -25,20 +28,36 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   *        [--ab key=v1|v2] [query ...]      (data: SPARK_GRAFT_SF_DIR) */
 object Profile {
 
+  /** A SparkEntry row: builds its result for a session and an sf dir. */
+  type Row = (SparkSession, String) => DataFrame
+
+  /** Executes `df`'s plan to completion without shipping its rows to the
+    * driver. */
+  def consume(df: DataFrame): Unit = { df.count(); () }
+
+  /** Runs row `fn` once at `sfDir` through [[consume]]; returns the
+    * failure's message if it threw. */
+  def run(spark: SparkSession, fn: Row, sfDir: String): Option[String] =
+    try { consume(fn(spark, sfDir)); None }
+    catch { case t: Throwable => Some(String.valueOf(t.getMessage)) }
+
   final case class Stage(id: Int, tasks: Int, taskMs: Long, maxTaskMs: Long, name: String)
 
   /** What the listeners saw in one rep. */
   final case class Census(jobs: Int, stages: Seq[Stage], shuffleReadBytes: Long,
-      shuffleWriteBytes: Long, spillBytes: Long, batchMs: Seq[Map[String, Long]]) {
+      shuffleWriteBytes: Long, spillBytes: Long, gcMs: Long,
+      batchMs: Seq[Map[String, Long]]) {
     def tasks: Int = stages.map(_.tasks).sum
     def taskMs: Long = stages.map(_.taskMs).sum
     def maxTaskMs: Long = stages.map(_.maxTaskMs).maxOption.getOrElse(0L)
   }
+  object Census { val empty: Census = Census(0, Nil, 0L, 0L, 0L, 0L, Nil) }
 
-  /** One row under one conf value: every rep's seconds and the census of
-    * the fastest rep. */
+  /** One row under one conf value: the successful reps' seconds, the census
+    * of the fastest of them (empty when none succeeded) and the first
+    * failure's message. */
   final case class Record(query: String, conf: Option[String], repsS: Seq[Double],
-      census: Census) {
+      census: Census, error: Option[String] = None) {
     def json: String = {
       def num(v: Double) = "%.3f".formatLocal(java.util.Locale.ROOT, v)
       def obj(kv: (String, String)*) =
@@ -56,8 +75,9 @@ object Profile {
         "task_max_ms" -> c.maxTaskMs.toString, "top_stages" -> top.mkString("[", ",", "]"),
         "shuffle_read_bytes" -> c.shuffleReadBytes.toString,
         "shuffle_write_bytes" -> c.shuffleWriteBytes.toString,
-        "spill_bytes" -> c.spillBytes.toString,
-        "batch_ms" -> batches.mkString("[", ",", "]")): _*)
+        "spill_bytes" -> c.spillBytes.toString, "gc_ms" -> c.gcMs.toString,
+        "batch_ms" -> batches.mkString("[", ",", "]")) ++
+        error.map(e => "error" -> Verify.jsonString(e)): _*)
     }
   }
 
@@ -70,6 +90,9 @@ object Profile {
     private val stages = mutable.ArrayBuffer[Stage]()
     private var shuffleRead, shuffleWrite, spill = 0L
     private val batches = mutable.ArrayBuffer[Map[String, Long]]()
+    private val gcBeans = java.lang.management.ManagementFactory.getGarbageCollectorMXBeans
+    private def gcMillis: Long = gcBeans.asScala.map(b => math.max(0L, b.getCollectionTime)).sum
+    private var gc0 = gcMillis
 
     private val sparkListener = new SparkListener {
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
@@ -107,9 +130,11 @@ object Profile {
     def take(): Census = {
       GraftPlanBridge.drainListeners(spark.sparkContext)
       synchronized {
-        val c = Census(jobs, stages.toSeq, shuffleRead, shuffleWrite, spill, batches.toSeq)
+        val gc = gcMillis
+        val c = Census(jobs, stages.toSeq, shuffleRead, shuffleWrite, spill, gc - gc0,
+          batches.toSeq)
         jobs = 0; running.clear(); stages.clear(); batches.clear()
-        shuffleRead = 0; shuffleWrite = 0; spill = 0
+        shuffleRead = 0; shuffleWrite = 0; spill = 0; gc0 = gc
         c
       }
     }
@@ -120,29 +145,37 @@ object Profile {
     }
   }
 
-  /** Times `reps` runs of row `name` (each behind a gc+settle boundary),
-    * under each value of `ab` in turn when given, and returns one record
-    * per value. The conf is restored to the session's own value after. */
-  def profile(spark: SparkSession, name: String, sfDir: String, reps: Int,
-      ab: Option[(String, Seq[String])] = None): Seq[Record] = {
+  /** Times `reps` runs of row `fn` at `sfDir` (each behind a gc+settle
+    * boundary), plus one more when every rep succeeded and the fastest took
+    * over `slowSec` seconds, under each value of `ab` in turn when given.
+    * Returns one record per value, named `name`. A rep that throws is not a
+    * reading. The conf is restored to the session's own value after. */
+  def profile(spark: SparkSession, name: String, fn: Row, sfDir: String, reps: Int,
+      ab: Option[(String, Seq[String])] = None,
+      slowSec: Double = Double.PositiveInfinity): Seq[Record] = {
     require(reps > 0, s"reps must be positive, got $reps")
-    val fn = SparkEntry.queries(name)
     val settings: Seq[Option[(String, String)]] =
       ab.fold(Seq(Option.empty[(String, String)])) { case (k, vs) => vs.map(v => Some(k -> v)) }
     val saved = ab.map { case (k, _) => k -> spark.conf.getOption(k) }
     val runs = settings.map(_ => mutable.ArrayBuffer[(Double, Census)]())
+    val errors = mutable.ArrayBuffer.fill(settings.size)(Option.empty[String])
     val recorder = new Recorder(spark)
+    def rep(i: Int): Unit = {
+      settings(i).foreach { case (k, v) => spark.conf.set(k, v) }
+      System.gc()
+      Thread.sleep(150)
+      recorder.take()
+      val t0 = System.nanoTime()
+      val failure = run(spark, fn, sfDir)
+      val dt = (System.nanoTime() - t0) / 1e9
+      val census = recorder.take()
+      if (failure.isEmpty) runs(i) += dt -> census
+      else if (errors(i).isEmpty) errors(i) = failure
+    }
     try {
-      for (_ <- 1 to reps; (setting, i) <- settings.zipWithIndex) {
-        setting.foreach { case (k, v) => spark.conf.set(k, v) }
-        System.gc()
-        Thread.sleep(150)
-        recorder.take()
-        val t0 = System.nanoTime()
-        fn(spark, sfDir).count()
-        val dt = (System.nanoTime() - t0) / 1e9
-        runs(i) += dt -> recorder.take()
-      }
+      for (_ <- 1 to reps; i <- settings.indices) rep(i)
+      for (i <- settings.indices
+           if errors(i).isEmpty && runs(i).map(_._1).min > slowSec) rep(i)
     } finally {
       recorder.close()
       saved.foreach {
@@ -150,9 +183,9 @@ object Profile {
         case (k, None) => spark.conf.unset(k)
       }
     }
-    settings.zip(runs).map { case (setting, rs) =>
-      Record(name, setting.map { case (k, v) => s"$k=$v" }, rs.map(_._1).toSeq,
-        rs.minBy(_._1)._2)
+    settings.indices.map { i =>
+      Record(name, settings(i).map { case (k, v) => s"$k=$v" }, runs(i).map(_._1).toSeq,
+        runs(i).minByOption(_._1).fold(Census.empty)(_._2), errors(i))
     }
   }
 
@@ -193,15 +226,14 @@ object Profile {
     val sfDir = Session.sfDir
     val spark = Session.local()
     Bench.warmup(spark, sfDir, "profile", opts.queries)
-    var failed = 0
+    var failed = false
     opts.queries.foreach { n =>
-      try profile(spark, n, sfDir, opts.reps, opts.ab).foreach(r => println(r.json))
-      catch { case t: Throwable =>
-        failed += 1
-        println(s"""{"query":${Verify.jsonString(n)},"error":${Verify.jsonString(String.valueOf(t.getMessage))}}""")
+      profile(spark, n, SparkEntry.queries(n), sfDir, opts.reps, opts.ab).foreach { r =>
+        println(r.json)
+        failed ||= r.error.isDefined
       }
     }
     spark.stop()
-    if (failed > 0) sys.exit(1)
+    if (failed) sys.exit(1)
   }
 }

@@ -32,9 +32,6 @@ object ScaleSmoke {
       idCols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(t * OFF)))
     }.reduce(_ unionAll _)
 
-  private def tile(df: DataFrame, idCols: Seq[String]): DataFrame =
-    tileN(df, idCols, TILES)
-
   def ensureData(spark: SparkSession): Unit =
     ensureDataAt(spark, DST, TILES)
 
@@ -91,9 +88,9 @@ object ScaleSmoke {
   def ensureRelationalTiles(spark: SparkSession): Unit = {
     val done = new java.io.File(s"$DST/_DONE_REL")
     if (done.exists()) return
-    tile(spark.read.parquet(s"$SRC/lineitem.parquet"), Seq("l_orderkey"))
+    tileN(spark.read.parquet(s"$SRC/lineitem.parquet"), Seq("l_orderkey"), TILES)
       .write.mode("overwrite").parquet(s"$DST/lineitem.parquet")
-    tile(spark.read.parquet(s"$SRC/orders.parquet"), Seq("o_orderkey"))
+    tileN(spark.read.parquet(s"$SRC/orders.parquet"), Seq("o_orderkey"), TILES)
       .write.mode("overwrite").parquet(s"$DST/orders.parquet")
     done.createNewFile()
     ()
@@ -662,17 +659,12 @@ object ScaleSmoke {
     // JIT/codegen warmup at the smallest SF. A row whose warm-up reached a
     // setup artifact (graft.Artifacts) other than the staged event source
     // (prestage, below) is a setup row: it runs once untimed per dir.
-    val setupRows = names.filter { n =>
-      (Artifacts.touching {
-        try query(n)(spark, WARM).count()
-        catch { case t: Throwable =>
-          System.err.println(s"[scale] warmup $n failed: ${t.getMessage}") }
-      } -- graft.queries.StreamQueries.stagedEventArtifacts).nonEmpty
-    }.toSet
+    val setupRows = graft.Bench.setupRows(spark, WARM, "scale", names.map(n => n -> query(n)),
+      ignore = graft.queries.StreamQueries.stagedEventArtifacts).toSet
     val tag = if (x100) "sf10(100x)" else "sf1(10x)"
-    println(f"${"query"}%-24s ${"sf0.1"}%8s $tag%10s  ratio ${"rows0.1"}%9s ${"rowsBig"}%9s")
+    println(f"${"query"}%-24s ${"sf0.1"}%8s $tag%10s  ratio")
     names.foreach { n =>
-      def time(d: String): (Double, Long) = {
+      def time(d: String): Profile.Record = {
         // one-time event staging is done via prestage (below), outside the
         // timed run. Streaming rows are deliberately timed on their FIRST
         // run per dir: re-running a streaming query creates a fresh
@@ -684,18 +676,18 @@ object ScaleSmoke {
         // setup rows run once untimed (a memoized build is the offline
         // step), so the measured number is the steady-state serving/query
         // side, matching Bench semantics
-        if (setupRows(n)) query(n)(spark, d).count()
-        System.gc(); Thread.sleep(150)
-        val t0 = System.nanoTime()
-        val rows = query(n)(spark, d).count()
-        ((System.nanoTime() - t0) / 1e9, rows)
+        if (setupRows(n)) Profile.run(spark, query(n), d).foreach(m =>
+          System.err.println(s"[scale] setup $n failed: $m"))
+        val Seq(r) = Profile.profile(spark, n, query(n), d, reps = 1)
+        r
       }
-      try {
-        val (small, rowsS) = time(SRC)
-        val (big, rowsB) = time(dst)
-        println(f"$n%-24s $small%8.2f $big%9.2f  ${big / small}%5.1fx $rowsS%9d $rowsB%9d")
-      } catch { case t: Throwable =>
-        println(s"$n FAILED: ${t.getMessage}")
+      val small = time(SRC)
+      val big = time(dst)
+      (small.error ++ big.error).headOption match {
+        case Some(m) => println(s"$n FAILED: $m")
+        case None =>
+          val (s, b) = (small.repsS.head, big.repsS.head)
+          println(f"$n%-24s $s%8.2f $b%9.2f  ${b / s}%5.1fx")
       }
     }
     spark.stop()
