@@ -31,9 +31,9 @@ object Profile {
   /** A SparkEntry row: builds its result for a session and an sf dir. */
   type Row = (SparkSession, String) => DataFrame
 
-  /** Executes `df`'s plan to completion without shipping its rows to the
-    * driver. */
-  def consume(df: DataFrame): Unit = { df.count(); () }
+  /** Executes `df`'s whole plan without shipping its rows to the driver:
+    * count() lets Catalyst prune projections, windows, generators, joins. */
+  def consume(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
   /** Runs row `fn` once at `sfDir` through [[consume]]; returns the
     * failure's message if it threw. */

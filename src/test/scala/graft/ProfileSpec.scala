@@ -84,6 +84,47 @@ class ProfileSpec extends SparkTestBase {
     assert(b.get("error").asText == "a \"quoted\"\nmessage")
   }
 
+  test("consume runs the whole plan: q33 keeps its Window, d57 its Join and Generate") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.execution.{GenerateExec, QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.joins.BaseJoinExec
+    import org.apache.spark.sql.execution.window.WindowExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val plans = scala.collection.mutable.ArrayBuffer[SparkPlan]()
+    val listener = new QueryExecutionListener {
+      def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        plans.synchronized { plans += qe.executedPlan; () }
+      def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    val aqe = new AdaptiveSparkPlanHelper {}
+    // the executed nodes of `action` on row `name`, AQE stages included
+    def executed(name: String, action: DataFrame => Unit): Seq[SparkPlan] = {
+      val df = row(name)(spark, sf)
+      GraftPlanBridge.drainListeners(spark.sparkContext)
+      plans.synchronized(plans.clear())
+      action(df)
+      GraftPlanBridge.drainListeners(spark.sparkContext)
+      plans.synchronized(plans.toSeq).flatMap(p => aqe.collect(p) { case n => n })
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val count: DataFrame => Unit = df => { df.count(); () }
+      for ((name, kinds) <- Seq(
+          "q33_window_rank" -> Seq[SparkPlan => Boolean](_.isInstanceOf[WindowExec]),
+          "d57_html_extract" -> Seq[SparkPlan => Boolean](
+            _.isInstanceOf[BaseJoinExec], _.isInstanceOf[GenerateExec]))) {
+        val whole = executed(name, Profile.consume)
+        val counted = executed(name, count)
+        assert(counted.nonEmpty, s"$name: no plan seen under count()")
+        for (kind <- kinds) {
+          assert(whole.exists(kind), s"$name under consume: ${whole.map(_.nodeName)}")
+          assert(!counted.exists(kind), s"$name under count(): ${counted.map(_.nodeName)}")
+        }
+      }
+    } finally spark.listenerManager.unregister(listener)
+  }
+
   test("malformed arguments fail with a message naming them") {
     assert(Profile.parseArgs(Seq("--reps", "3", "q19_agg")) ==
       Profile.Args(3, None, Seq("q19_agg")))
