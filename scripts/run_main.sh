@@ -2,8 +2,11 @@
 # Run a graft main class directly (after `sbt compile`), bypassing sbt's JVM
 # startup. Usage: scripts/run_main.sh <main class> [args ...], e.g.
 #   scripts/run_main.sh graft.Verify <sf dir> <out dir>
+#   SPARK_GRAFT_SF_DIR=<sf dir> scripts/run_main.sh graft.Bench
+#     (stdout JSON line; BENCH_full.json and BENCH_profile.json in the cwd)
 #   SPARK_GRAFT_SF_DIR=<sf dir> scripts/run_main.sh \
 #     graft.tools.Profile [--reps N] [--ab key=v1|v2] [query ...]
+#     (one JSON line per row: the per-layer record Bench writes)
 set -e
 CLASS="$1"; shift
 ADD_OPENS=""

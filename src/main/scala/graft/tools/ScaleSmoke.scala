@@ -32,6 +32,9 @@ object ScaleSmoke {
       idCols.foldLeft(df)((d, c) => d.withColumn(c, col(c) + lit(t * OFF)))
     }.reduce(_ unionAll _)
 
+  private def tile(df: DataFrame, idCols: Seq[String]): DataFrame =
+    tileN(df, idCols, TILES)
+
   def ensureData(spark: SparkSession): Unit =
     ensureDataAt(spark, DST, TILES)
 
@@ -88,9 +91,9 @@ object ScaleSmoke {
   def ensureRelationalTiles(spark: SparkSession): Unit = {
     val done = new java.io.File(s"$DST/_DONE_REL")
     if (done.exists()) return
-    tileN(spark.read.parquet(s"$SRC/lineitem.parquet"), Seq("l_orderkey"), TILES)
+    tile(spark.read.parquet(s"$SRC/lineitem.parquet"), Seq("l_orderkey"))
       .write.mode("overwrite").parquet(s"$DST/lineitem.parquet")
-    tileN(spark.read.parquet(s"$SRC/orders.parquet"), Seq("o_orderkey"), TILES)
+    tile(spark.read.parquet(s"$SRC/orders.parquet"), Seq("o_orderkey"))
       .write.mode("overwrite").parquet(s"$DST/orders.parquet")
     done.createNewFile()
     ()
