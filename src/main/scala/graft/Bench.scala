@@ -129,8 +129,8 @@ object Bench {
     // panel rows ride the same queries map (ADDED keys, prefixed) but are
     // EXCLUDED from the headline total so `value` stays comparable
     // round-over-round (the panel times a different, 10×-tiled input)
-    // ascending time: the driver keeps only the TAIL of a long stdout line,
-    // so the costliest rows are the ones that survive its truncation
+    // ascending time: a reader that keeps only the TAIL of a long stdout
+    // line then still sees the costliest rows
     val timed = (records ++ panel).map(r => r.query -> best(r)).sortBy(_._2)
     def queriesMap(scale: Double) = timed
       .map { case (k, v) => s"\"" + k + "\":" + fmt(v * scale) }
