@@ -60,6 +60,7 @@ def main(sf_dir, out_dir):
     except Exception:
         failures = {}
     results = {}
+    vacuous = []  # compared, but 0 rows on both sides: the check shows nothing
     import time
     t_start = time.time()
     for name in sorted(oracle):
@@ -111,6 +112,8 @@ def main(sf_dir, out_dir):
             return bad, s_dt, d_dt
         sc, sr = norm_rows(s_cols, s_rows)
         dc, dr = norm_rows(d_cols, d_rows)
+        if not sr and not dr:
+            vacuous.append(name)
         if sc != dc:
             results[name] = f"SCHEMA-MISMATCH spark={sc} duck={dc}"
         elif len(sr) != len(dr):
@@ -142,6 +145,7 @@ def main(sf_dir, out_dir):
     for name, v in results.items():
         flag = "OK " if v.startswith("EXACT") else "!! "
         print(f"{flag}{name}: {v}")
+    print(f"vacuous (0 rows on both sides): {vacuous}")
     # queries with no oracle entry
     import os
     no_oracle = [d for d in sorted(os.listdir(out_dir))

@@ -80,34 +80,50 @@ object MvRewrite extends Rule[LogicalPlan] {
     * aggregate `mvDef` (aliases = MV column names) over the single-path
     * base table at `basePath`. `rollups` maps each MV measure column to
     * its re-aggregation function ("sum" | "min" | "max" — count partials
-    * roll up via "sum"). Idempotent; also installs this rule into the
-    * session's `experimental.extraOptimizations` (the user-provided batch
-    * that runs after pushdown/pruning, where the scan shape is final). */
+    * roll up via "sum"). A second call for a (basePath, mvPath) that this
+    * session already registered is a no-op: it neither builds `mvDef` nor
+    * re-reads and re-measures the MV. After [[clear]] or [[unregister]],
+    * or from another session, the call registers again. Every call also
+    * installs this rule into the session's `experimental.extraOptimizations`
+    * (the user-provided batch that runs after pushdown/pruning, where the
+    * scan shape is final). */
   def register(
-      spark: SparkSession, basePath: String, mvDef: DataFrame, mvPath: String,
+      spark: SparkSession, basePath: String, mvDef: => DataFrame, mvPath: String,
       groupCols: Seq[String], rollups: Map[String, String]): Unit = {
-    val aggPlan = mvDef.queryExecution.analyzed.collectFirst {
-      case a: Aggregate => a
-    }.getOrElse(throw new IllegalArgumentException(
-      s"MV definition for $basePath is not an aggregate"))
-    val measures = aggPlan.aggregateExpressions.collect {
-      case Alias(ae: AggregateExpression, name) if rollups.contains(name) =>
-        ae.aggregateFunction.sql(isDistinct = false) -> (rollups(name), name)
-    }.toMap
-    require(measures.size == rollups.size,
-      s"MV definition for $basePath: ${rollups.keySet -- measures.values.map(_._2)} not found as aggregate aliases")
-    val mvRel = spark.read.parquet(mvPath).queryExecution.analyzed.collectFirst {
-      case lr: LogicalRelation => lr
-    }.getOrElse(throw new IllegalStateException(s"$mvPath is not a file relation"))
-    val defn = MvDef(basePath, mvPath, mvRel, groupCols.toSet, measures,
-      graft.sources.Sinks.dirBytes(spark, mvPath))
-    registry.compute(basePath, (_, prev) =>
-      Option(prev).getOrElse(Vector.empty).filterNot(_.mvPath == mvPath) :+ defn)
+    if (!registered(spark, basePath, mvPath)) {
+      val aggPlan = mvDef.queryExecution.analyzed.collectFirst {
+        case a: Aggregate => a
+      }.getOrElse(throw new IllegalArgumentException(
+        s"MV definition for $basePath is not an aggregate"))
+      val measures = aggPlan.aggregateExpressions.collect {
+        case Alias(ae: AggregateExpression, name) if rollups.contains(name) =>
+          ae.aggregateFunction.sql(isDistinct = false) -> (rollups(name), name)
+      }.toMap
+      require(measures.size == rollups.size,
+        s"MV definition for $basePath: ${rollups.keySet -- measures.values.map(_._2)} not found as aggregate aliases")
+      val mvRel = spark.read.parquet(mvPath).queryExecution.analyzed.collectFirst {
+        case lr: LogicalRelation => lr
+      }.getOrElse(throw new IllegalStateException(s"$mvPath is not a file relation"))
+      val defn = MvDef(basePath, mvPath, mvRel, groupCols.toSet, measures,
+        graft.sources.Sinks.dirBytes(spark, mvPath))
+      registry.compute(basePath, (_, prev) =>
+        Option(prev).getOrElse(Vector.empty).filterNot(_.mvPath == mvPath) :+ defn)
+    }
     if (!spark.experimental.extraOptimizations.contains(MvRewrite))
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ MvRewrite
     ()
   }
+
+  /** Whether `mvPath` is registered over `basePath` with a relation bound to
+    * `spark`: a relation bound to another session (the test suites stop and
+    * rebuild theirs) must be re-read before it serves. */
+  private def registered(spark: SparkSession, basePath: String, mvPath: String): Boolean =
+    Option(registry.get(basePath)).exists(_.exists(mv => mv.mvPath == mvPath &&
+      (mv.mvRel.relation match {
+        case fs: HadoopFsRelation => fs.sparkSession eq spark
+        case _ => false
+      })))
 
   /** Test/benchmark hook: forget every registered MV. */
   def clear(): Unit = registry.clear()

@@ -1706,7 +1706,8 @@ object RelationalQueries {
     * from it. Registration is per-(JVM, dir) but re-run against the CURRENT
     * session on every call — registry entries survive a session swap, the
     * `extraOptimizations` installation must follow the live session (same
-    * lesson as [[bucketedTables]]'s catalog gate). Decimal sum partials keep
+    * lesson as [[bucketedTables]]'s catalog gate); a call from the session
+    * that registered it is a no-op. Decimal sum partials keep
     * re-aggregation exact; the count partial rolls up via sum. */
   private def lineitemMv(s: SparkSession, d: String): Unit = {
     def mvDef = Tables.lineitem(s, d)

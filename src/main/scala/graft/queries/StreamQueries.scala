@@ -5,7 +5,6 @@ import graft.operators.{Dedup, UrlCuration}
 import graft.streaming.EventStreams
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.LongType
 
 /** Structured Streaming rows under the DuckDB correctness gate: each runs a
   * real streaming query (file source → watermarked transform → sink) to
@@ -81,21 +80,13 @@ object StreamQueries {
   private[graft] val stagedEventArtifacts: Set[String] =
     Set(1, 2).map(stagedEventsName)
 
-  /** readStream over the staged events dir, with the same ts normalization
-    * as the batch path (Tables.events): LONG nanos → micros, TIMESTAMP_NTZ
-    * → TIMESTAMP (instant-exact under the pinned UTC session). Watermarks
-    * require TimestampType, so every branch must land there. */
-  private def eventsStream(s: SparkSession, d: String, copies: Int = 1): DataFrame = {
-    val schema = s.read.parquet(s"$d/events.parquet").schema
-    val raw = s.readStream.schema(schema).parquet(stageEvents(d, copies))
-    schema("ts").dataType match {
-      case LongType =>
-        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
-      case org.apache.spark.sql.types.TimestampNTZType =>
-        raw.withColumn("ts", col("ts").cast("timestamp"))
-      case _ => raw
-    }
-  }
+  /** readStream over the staged events dir, with the file's own schema
+    * (from the [[Tables]] memo) and the batch path's ts normalization
+    * ([[Tables.normalizeTs]]). Watermarks require TimestampType, so every
+    * branch must land there. */
+  private def eventsStream(s: SparkSession, d: String, copies: Int = 1): DataFrame =
+    Tables.normalizeTs(
+      s.readStream.schema(Tables.schema(s, d, "events")).parquet(stageEvents(d, copies)))
 
   /** Run a streaming DataFrame to completion into a uniquely-named memory
     * sink and return the materialized table. */

@@ -16,7 +16,8 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
   * [[Bench.warmup]], then prints one JSON line per row — the lines Bench
   * writes to BENCH_profile.json: the successful rep times, the first
   * failure's message, and what one SparkListener and one
-  * StreamingQueryListener saw in the fastest rep — jobs, stages and tasks;
+  * StreamingQueryListener saw in the fastest rep — the ms and jobs of
+  * building the row's DataFrame before its action; jobs, stages and tasks;
   * summed and max task ms with the top stages; shuffle read/write and spill
   * bytes; GC ms; each streaming batch's durationMs.
   *
@@ -35,18 +36,21 @@ object Profile {
     * count() lets Catalyst prune projections, windows, generators, joins. */
   def consume(df: DataFrame): Unit = df.write.format("noop").mode("overwrite").save()
 
-  /** Runs row `fn` once at `sfDir` through [[consume]]; returns the
+  /** Runs row `fn` once at `sfDir` through [[consume]], calling `built`
+    * between building the row's DataFrame and consuming it; returns the
     * failure's message if it threw. */
-  def run(spark: SparkSession, fn: Row, sfDir: String): Option[String] =
-    try { consume(fn(spark, sfDir)); None }
+  def run(spark: SparkSession, fn: Row, sfDir: String,
+      built: () => Unit = () => ()): Option[String] =
+    try { val df = fn(spark, sfDir); built(); consume(df); None }
     catch { case t: Throwable => Some(String.valueOf(t.getMessage)) }
 
   final case class Stage(id: Int, tasks: Int, taskMs: Long, maxTaskMs: Long, name: String)
 
-  /** What the listeners saw in one rep. */
+  /** What the listeners saw in one rep; `buildMs` and `buildJobs` cover
+    * building the row's DataFrame, which `jobs` includes. */
   final case class Census(jobs: Int, stages: Seq[Stage], shuffleReadBytes: Long,
       shuffleWriteBytes: Long, spillBytes: Long, gcMs: Long,
-      batchMs: Seq[Map[String, Long]]) {
+      batchMs: Seq[Map[String, Long]], buildMs: Double = 0.0, buildJobs: Int = 0) {
     def tasks: Int = stages.map(_.tasks).sum
     def taskMs: Long = stages.map(_.taskMs).sum
     def maxTaskMs: Long = stages.map(_.maxTaskMs).maxOption.getOrElse(0L)
@@ -70,6 +74,7 @@ object Profile {
       obj(Seq("query" -> Verify.jsonString(query)) ++
         conf.map(v => "conf" -> Verify.jsonString(v)) ++ Seq(
         "reps_s" -> repsS.map(num).mkString("[", ",", "]"),
+        "build_ms" -> num(c.buildMs), "build_jobs" -> c.buildJobs.toString,
         "jobs" -> c.jobs.toString, "stages" -> c.stages.size.toString,
         "tasks" -> c.tasks.toString, "task_ms" -> c.taskMs.toString,
         "task_max_ms" -> c.maxTaskMs.toString, "top_stages" -> top.mkString("[", ",", "]"),
@@ -139,6 +144,13 @@ object Profile {
       }
     }
 
+    /** The jobs ended since the previous take, once the bus has delivered
+      * everything posted so far; does not reset. */
+    def jobsSoFar(): Int = {
+      GraftPlanBridge.drainListeners(spark.sparkContext)
+      synchronized(jobs)
+    }
+
     def close(): Unit = {
       spark.sparkContext.removeSparkListener(sparkListener)
       spark.streams.removeListener(streamListener)
@@ -165,10 +177,18 @@ object Profile {
       System.gc()
       Thread.sleep(150)
       recorder.take()
+      // the build's job count is read outside the timed span
+      var buildNs, pausedNs = 0L
+      var buildJobs = 0
       val t0 = System.nanoTime()
-      val failure = run(spark, fn, sfDir)
-      val dt = (System.nanoTime() - t0) / 1e9
-      val census = recorder.take()
+      val failure = run(spark, fn, sfDir, built = () => {
+        val t1 = System.nanoTime()
+        buildNs = t1 - t0
+        buildJobs = recorder.jobsSoFar()
+        pausedNs = System.nanoTime() - t1
+      })
+      val dt = (System.nanoTime() - t0 - pausedNs) / 1e9
+      val census = recorder.take().copy(buildMs = buildNs / 1e6, buildJobs = buildJobs)
       if (failure.isEmpty) runs(i) += dt -> census
       else if (errors(i).isEmpty) errors(i) = failure
     }

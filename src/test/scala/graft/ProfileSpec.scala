@@ -29,6 +29,16 @@ class ProfileSpec extends SparkTestBase {
     assert(r.census.batchMs.forall(_.contains("triggerExecution")), r.json)
   }
 
+  test("a row's build is timed and its jobs counted apart from its action") {
+    val jobsAtBuild: Profile.Row = (s, d) => {
+      s.range(3).collect()
+      row("q19_agg")(s, d)
+    }
+    val Seq(r) = Profile.profile(spark, "jobs_at_build", jobsAtBuild, sf, reps = 1)
+    assert(r.census.buildJobs == 1 && r.census.jobs > 1, r.json)
+    assert(r.census.buildMs > 0 && r.census.buildMs < r.repsS.head * 1000, r.json)
+  }
+
   test("an A/B run yields one record per value and restores the conf") {
     val key = "spark.sql.adaptive.coalescePartitions.minPartitionSize"
     val rs = Profile.profile(spark, "q19_agg", row("q19_agg"), sf, reps = 1,
@@ -74,7 +84,7 @@ class ProfileSpec extends SparkTestBase {
     for (r <- records) {
       val j = mapper.readTree(r.json)
       assert(j.get("query").asText == r.query, r.json)
-      for (k <- Seq("reps_s", "jobs", "stages", "tasks", "task_ms", "shuffle_read_bytes",
+      for (k <- Seq("reps_s", "build_ms", "build_jobs", "jobs", "stages", "tasks", "task_ms", "shuffle_read_bytes",
           "shuffle_write_bytes", "spill_bytes", "gc_ms", "batch_ms"))
         assert(j.has(k), s"$k missing: ${r.json}")
     }
