@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Persisted, incrementally-maintained BM25 posting index — the sparse
@@ -261,19 +261,24 @@ object Bm25Index {
     val dcols = deleteKeys.columns.toSeq
     require(dcols.nonEmpty && dcols.forall(keyCols.contains),
       s"delete-key columns $dcols must be a subset of index keys $keyCols")
-    val del = deleteKeys.distinct().localCheckpoint(true)
-    val terms = IncrementalAgg.readStatePart(spark, statePath, TermsPart)
-    val stats = IncrementalAgg.readStatePart(spark, statePath, StatsPart)
     // segment-range pruning: when the delete keys carry the guard id
     // (keyCols.head — the takedown shape), the correction scans read ONLY
     // the segments whose committed [min, max] id range the delete set
     // intersects (usually the one batch the items arrived in), never the
     // whole state. Delete sets without the head key fall back to a full
-    // (still read-only, column-pruned) scan.
+    // (still read-only, column-pruned) scan. The bounds are observed in
+    // the delete keys' own checkpoint job.
+    val headKey = dcols.contains(keyCols.head)
+    val obs = Observation()
+    val keys = deleteKeys.distinct()
+    val del = (if (headKey) keys.observe(obs,
+        min(col(keyCols.head).cast("long")), max(col(keyCols.head).cast("long")))
+      else keys).localCheckpoint(true)
+    val terms = IncrementalAgg.readStatePart(spark, statePath, TermsPart)
+    val stats = IncrementalAgg.readStatePart(spark, statePath, StatsPart)
     val bounds: Option[(Long, Long)] =
-      if (dcols.contains(keyCols.head)) {
-        val r = del.agg(min(col(keyCols.head).cast("long")).as("mn"),
-          max(col(keyCols.head).cast("long")).as("mx")).head
+      if (headKey) {
+        val r = IncrementalAgg.observed(obs)
         if (r.isNullAt(0)) Some((0L, -1L)) else
           Some((r.getLong(0), r.getLong(1)))
       } else None

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types._
 
 /** Incrementally-maintained aggregate state (materialized-view refresh):
   * a persisted per-key (count, decimal sum, max) table that new batches
@@ -187,7 +187,21 @@ object IncrementalAgg {
     * corpus-sized bytes live in shared segments, swept only when NO
     * retained manifest references them). */
   private def retainVersions(spark: SparkSession): Int =
-    math.max(1, spark.conf.get("spark.graft.state.retainVersions", "2").toInt)
+    confNumber(spark, "spark.graft.state.retainVersions", "2",
+      "a positive integer")(_.toInt)(_ >= 1)
+
+  /** A numeric state conf, or an IllegalArgumentException that names the
+    * conf and the value it could not use. */
+  private def confNumber[T](
+      spark: SparkSession, key: String, default: String, what: String)(
+      parse: String => T)(valid: T => Boolean): T = {
+    val raw = spark.conf.get(key, default)
+    def bad = new IllegalArgumentException(s"$key must be $what, got '$raw'")
+    val v = try parse(raw.trim)
+      catch { case _: NumberFormatException => throw bad }
+    if (!valid(v)) throw bad
+    v
+  }
 
   /** Delete versions behind the retention window, then sweep segment
     * dirs no RETAINED manifest references (a fold's dropped segments stay
@@ -196,11 +210,11 @@ object IncrementalAgg {
     * just-committed manifest, passed in memory so the common case reads
     * only the K-1 older manifest files. */
   private def pruneBehindRetention(
-      spark: SparkSession, statePath: String, newId: Long,
+      spark: SparkSession, statePath: String, newId: Long, retain: Int,
       latestManifest: Option[Seq[(String, Vector[SegMeta])]]): Unit = {
     val fs = fsOf(spark, statePath)
     val vs = versions(spark, statePath)
-    val keep = vs.takeRight(retainVersions(spark))
+    val keep = vs.takeRight(retain)
     vs.filterNot(keep.contains).foreach { old =>
       fs.delete(new org.apache.hadoop.fs.Path(s"$statePath/v$old"), true)
     }
@@ -232,7 +246,8 @@ object IncrementalAgg {
   /** Age (ms) past which a leftover lease from a crashed writer may be
     * broken: `spark.graft.state.lockStaleMs`, default 10 minutes. */
   private def lockStaleMs(spark: SparkSession): Long =
-    spark.conf.get("spark.graft.state.lockStaleMs", "600000").toLong
+    confNumber(spark, "spark.graft.state.lockStaleMs", "600000",
+      "a non-negative number of milliseconds")(_.toLong)(_ >= 0L)
 
   /** Create-exclusive LEASE serializing commits on one state path: the
     * whole commit protocol (entry read → staging writes → publishing
@@ -249,6 +264,7 @@ object IncrementalAgg {
     * take; raise it for very large folds). */
   private def withCommitLock[T](
       spark: SparkSession, statePath: String)(body: => T): T = {
+    val staleMs = lockStaleMs(spark)
     val fs = fsOf(spark, statePath)
     val root = new org.apache.hadoop.fs.Path(statePath)
     if (!fs.exists(root)) fs.mkdirs(root)
@@ -270,7 +286,7 @@ object IncrementalAgg {
       val stale = (try Some(fs.getFileStatus(lock))
         catch { case _: java.io.FileNotFoundException => None })
         .forall(st => System.currentTimeMillis() - st.getModificationTime >
-          lockStaleMs(spark))
+          staleMs)
       if (stale) { fs.delete(lock, false); acquired = tryAcquire() }
     }
     if (!acquired)
@@ -315,6 +331,7 @@ object IncrementalAgg {
   private def commit(
       spark: SparkSession, statePath: String, id: Long,
       merged: DataFrame, expectedPrev: Option[Long]): Unit = {
+    val retain = retainVersions(spark)
     val tmp = s"$statePath/.tmp-$id"
     merged.write.mode("overwrite").parquet(tmp)
     requireNoVersionDrift(spark, statePath, expectedPrev)
@@ -323,7 +340,7 @@ object IncrementalAgg {
     if (fs.exists(dest)) fs.delete(dest, true)
     if (!fs.rename(new org.apache.hadoop.fs.Path(tmp), dest))
       throw new java.io.IOException(s"commit rename $tmp -> $dest failed")
-    pruneBehindRetention(spark, statePath, id, None)
+    pruneBehindRetention(spark, statePath, id, retain, None)
     // sweep staging leftovers from crashed earlier commits (the writer is
     // single here, so anything .tmp-* other than our just-renamed dir is
     // garbage)
@@ -443,6 +460,9 @@ object IncrementalAgg {
   // folds tombstones into one rewritten segment on an amortized schedule.
 
   private val ManifestFile = "_segments"
+  /** Beside the manifest: one `part<TAB>schema json` line per part, the
+    * schema a reader of that part gets (see [[readPart]]). */
+  private val SchemaFile = "_schemas"
   private val SegCol = "__seg"
 
   /** Canonical name of `part`'s tombstone part. */
@@ -472,26 +492,43 @@ object IncrementalAgg {
 
   /** Parsed manifest: per-part segments in append order (present-but-
     * empty = a part whose segments were all folded away, e.g. cleared
-    * tombstones), plus the guard-id column names the ranges refer to. */
+    * tombstones), the guard-id column names the ranges refer to, and the
+    * read schema the commit recorded for each part (empty for a version
+    * written before schema records). */
   private[graft] case class Manifest(
-      parts: Map[String, Vector[SegMeta]], idCols: Map[String, String]) {
+      parts: Map[String, Vector[SegMeta]], idCols: Map[String, String],
+      schemas: Map[String, StructType] = Map.empty) {
     def segNames(part: String): Vector[String] =
       parts.getOrElse(part, Vector.empty).map(_.name)
   }
 
   /** The version's manifest, if it was committed by an append commit. */
+  private def readText(
+      fs: org.apache.hadoop.fs.FileSystem,
+      p: org.apache.hadoop.fs.Path): String = {
+    val in = fs.open(p)
+    try {
+      val buf = new java.io.ByteArrayOutputStream()
+      org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
+      buf.toString("UTF-8")
+    } finally in.close()
+  }
+
+  private def writeText(
+      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path,
+      lines: Seq[String]): Unit = {
+    val out = fs.create(p, true)
+    try out.write(lines.mkString("", "\n", "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
   private def readManifest(
       spark: SparkSession, vdir: String): Option[Manifest] = {
     val p = new org.apache.hadoop.fs.Path(s"$vdir/$ManifestFile")
     val fs = fsOf(spark, vdir)
     if (!fs.exists(p)) None
     else {
-      val in = fs.open(p)
-      val text = try {
-        val buf = new java.io.ByteArrayOutputStream()
-        org.apache.hadoop.io.IOUtils.copyBytes(in, buf, 8192, false)
-        buf.toString("UTF-8")
-      } finally in.close()
+      val text = readText(fs, p)
       val m = scala.collection.mutable.LinkedHashMap.empty[String, Vector[SegMeta]]
       val ids = scala.collection.mutable.LinkedHashMap.empty[String, String]
       text.split("\n").iterator.filter(_.nonEmpty).foreach { line =>
@@ -515,7 +552,18 @@ object IncrementalAgg {
             s"$vdir/$ManifestFile: bad manifest line '$line'")
         }
       }
-      Some(Manifest(m.toMap, ids.toMap))
+      val sp = new org.apache.hadoop.fs.Path(s"$vdir/$SchemaFile")
+      val schemas =
+        if (!fs.exists(sp)) Map.empty[String, StructType]
+        else readText(fs, sp).split("\n").iterator.filter(_.nonEmpty)
+          .map { line =>
+            val tab = line.indexOf('\t')
+            if (tab <= 0) throw new java.io.IOException(
+              s"$vdir/$SchemaFile: bad schema line '$line'")
+            line.take(tab) ->
+              DataType.fromJson(line.drop(tab + 1)).asInstanceOf[StructType]
+          }.toMap
+      Some(Manifest(m.toMap, ids.toMap, schemas))
     }
   }
 
@@ -523,7 +571,6 @@ object IncrementalAgg {
       fs: org.apache.hadoop.fs.FileSystem, dir: String,
       manifest: Seq[(String, Vector[SegMeta])],
       idCols: Map[String, String]): Unit = {
-    val out = fs.create(new org.apache.hadoop.fs.Path(s"$dir/$ManifestFile"), true)
     val idLines = idCols.toSeq.sortBy(_._1)
       .map { case (part, c) => s"#id\t$part\t$c" }
     val segLines = manifest.map { case (part, segs) =>
@@ -538,27 +585,86 @@ object IncrementalAgg {
         s"$part\t${sm.name}" + trimmed.map("\t" + _).mkString
       }.mkString("\n")
     }
-    try out.write((idLines ++ segLines)
-      .mkString("", "\n", "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeText(fs, new org.apache.hadoop.fs.Path(s"$dir/$ManifestFile"),
+      idLines ++ segLines)
   }
+
+  private def writeSchemas(
+      fs: org.apache.hadoop.fs.FileSystem, dir: String,
+      schemas: Map[String, StructType]): Unit =
+    writeText(fs, new org.apache.hadoop.fs.Path(s"$dir/$SchemaFile"),
+      schemas.toSeq.sortBy(_._1).map { case (part, s) => s"$part\t${s.json}" })
+
+  /** The schema parquet hands back for a frame written with `df.schema`:
+    * every field nullable, at every depth; names, types and metadata as
+    * written. */
+  private def asRead(t: DataType): DataType = t match {
+    case s: StructType => StructType(s.fields.map(f =>
+      f.copy(dataType = asRead(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(asRead(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(asRead(m.keyType), asRead(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** Read schema of an append part's partitioned dir: the data columns,
+    * then `__seg` and the caller's partition columns in directory order
+    * (partition columns keep their written type). */
+  private def appendPartSchema(
+      written: StructType, partitionCols: Seq[String]): StructType = {
+    val byName = written.fields.map(f => f.name -> f).toMap
+    val data = written.fields.filterNot(f => partitionCols.contains(f.name))
+    asRead(StructType(data ++ (StructField(SegCol, StringType) +:
+      partitionCols.map(byName)))).asInstanceOf[StructType]
+  }
+
+  /** Parquet read of `path` with the recorded schema when there is one
+    * (no inference job), else with inference (a version written before
+    * schema records). */
+  private def readPart(
+      spark: SparkSession, path: String, schema: Option[StructType]): DataFrame =
+    schema.fold(spark.read.parquet(path))(spark.read.schema(_).parquet(path))
+
+  /** What a segment write observed of its delta: the [min, max] of the
+    * guard-id column (when one is named and the delta is not empty), the
+    * row count, and the committed byte size. */
+  private case class SegStats(
+      range: Option[(Long, Long)], rows: Long, bytes: Long)
+
+  /** The metrics `obs` observed in the action that just ran. They arrive
+    * through the session's listener bus after the action returns; the
+    * wait is bounded, so a lost event fails the commit (before its
+    * publishing rename) instead of hanging it. */
+  private[graft] def observed(obs: Observation): org.apache.spark.sql.Row =
+    scala.concurrent.Await.result(obs.future,
+      scala.concurrent.duration.Duration(60, "s"))
 
   /** Write one immutable segment (staged, then renamed into place — a
     * replay of the same batchId overwrites its own orphan). Invisible to
     * readers until a committed manifest names it: the manifest's
-    * `__seg IN (...)` partition filter is what admits segments. Returns
-    * the segment's committed byte size (one metadata listing — feeds the
-    * manifest so compaction triggers never read data). */
+    * `__seg IN (...)` partition filter is what admits segments. The delta
+    * is computed ONCE: the write job itself observes its row count and
+    * guard-id range (`Dataset.observe`), and a partitioned part is
+    * rebalanced on its partition columns first, so each partition value
+    * lands as one file (AQE may still split a skewed one). The byte size
+    * is one metadata listing — all three feed the manifest, so guards and
+    * compaction triggers never read data. */
   private def writeSegment(
       spark: SparkSession, statePath: String, part: String, seg: String,
-      df: DataFrame, parts: Seq[String]): Long = {
+      df: DataFrame, parts: Seq[String], idCol: Option[String]): SegStats = {
     val fs = fsOf(spark, statePath)
     // staged OUTSIDE the part dir: compaction's delta frame READS the
     // part dir, so its write must never land inside what it scans
     val stage = s"$statePath/.segstage-$part-$seg"
     val stagePath = new org.apache.hadoop.fs.Path(stage)
     if (fs.exists(stagePath)) fs.delete(stagePath, true)
-    df.withColumn(SegCol, lit(seg)).write.mode("overwrite")
+    val obs = Observation()
+    val stats = count(lit(1)).as("n") +: idCol.toSeq.flatMap(c => Seq(
+      min(col(c).cast("long")).as("mn"), max(col(c).cast("long")).as("mx")))
+    val tagged = df.observe(obs, stats.head, stats.tail: _*)
+      .withColumn(SegCol, lit(seg))
+    (if (parts.isEmpty) tagged else tagged.hint("rebalance", parts.map(col): _*))
+      .write.mode("overwrite")
       .partitionBy(SegCol +: parts: _*).parquet(stage)
     val dest = new org.apache.hadoop.fs.Path(
       s"${segDir(statePath, part)}/$SegCol=$seg")
@@ -572,7 +678,11 @@ object IncrementalAgg {
     if (!fs.rename(staged, dest))
       throw new java.io.IOException(s"segment rename $staged -> $dest failed")
     fs.delete(stagePath, true) // staging shell (_SUCCESS) only
-    fs.getContentSummary(dest).getLength
+    val r = observed(obs)
+    SegStats(
+      if (idCol.isEmpty || r.isNullAt(1)) None
+      else Some((r.getLong(1), r.getLong(2))),
+      r.getLong(0), fs.getContentSummary(dest).getLength)
   }
 
   /** Whether any data file exists under `path` (recursive, first hit
@@ -590,8 +700,8 @@ object IncrementalAgg {
     * planning-time partition filter over the single partitioned dir. */
   private def readSegments(
       spark: SparkSession, statePath: String, part: String,
-      segs: Seq[String]): DataFrame =
-    spark.read.parquet(segDir(statePath, part))
+      schema: Option[StructType], segs: Seq[String]): DataFrame =
+    readPart(spark, segDir(statePath, part), schema)
       .filter(col(SegCol).isin(segs: _*))
       .drop(SegCol)
 
@@ -649,6 +759,7 @@ object IncrementalAgg {
       keepPrefix: Map[String, Int]): Unit = {
     val prev = latestVersion(spark, statePath)
     if (prev.exists(_ >= batchId)) return // replayed batch: no-op
+    val retain = retainVersions(spark)
     val fs = fsOf(spark, statePath)
     val prevDir = prev.map(v => s"$statePath/v$v")
     val prevM = prevDir.flatMap(readManifest(spark, _))
@@ -657,6 +768,10 @@ object IncrementalAgg {
     // id columns are sticky state metadata: once declared they persist in
     // every later manifest, so compaction and retraction know them
     val idCols = prevM.map(_.idCols).getOrElse(Map.empty) ++ guardIdCols
+    // schema records carry forward; every part this commit writes gets
+    // the schema of what it wrote
+    var schemas: Map[String, StructType] =
+      prevM.map(_.schemas).getOrElse(Map.empty)
     // one-time legacy migration (O(that part) ONCE, never again): a part
     // this commit appends to that still lives as a version-dir parquet
     // copy — the pre-segment rewrite layout, or a dir carried forward by
@@ -674,10 +789,12 @@ object IncrementalAgg {
         if (!prevParts.contains(part) &&
             fs.exists(new org.apache.hadoop.fs.Path(legacy))) {
           val seg = s"s${prev.get}m"
-          val nb = writeSegment(spark, statePath, part, seg,
-            spark.read.parquet(legacy),
-            partitionCols.getOrElse(part, Seq.empty))
+          val pcols = partitionCols.getOrElse(part, Seq.empty)
+          val legacyDf = readPart(spark, legacy, schemas.get(part))
+          val nb = writeSegment(spark, statePath, part, seg, legacyDf, pcols,
+            None).bytes
           prevParts += part -> Vector(SegMeta(seg, None, None, Some(nb)))
+          schemas += part -> appendPartSchema(legacyDf.schema, pcols)
         }
       }
     }
@@ -690,30 +807,37 @@ object IncrementalAgg {
           s"entry under $statePath — readers would never apply them; " +
           "commit (or migrate) the base part first")
     }
-    // one aggregate per delta: its [min, max] id range (guarded parts —
-    // used for the monotone check now and committed for later metadata
-    // guards and range-pruned retraction scans) and its row count (all
-    // parts — drives the tombstone-fraction compaction schedule)
-    val deltaStats: Map[String, (Option[(Long, Long)], Long)] =
-      appendDeltas.map { case (part, delta) =>
-        idCols.get(part) match {
-          case Some(c) =>
-            val r = delta.agg(min(col(c).cast("long")).as("mn"),
-              max(col(c).cast("long")).as("mx"),
-              count(lit(1)).as("n")).head
-            part -> ((if (r.isNullAt(0)) None
-                      else Some((r.getLong(0), r.getLong(1)))),
-              r.getLong(2))
-          case None =>
-            val r = delta.agg(count(lit(1)).as("n")).head
-            part -> ((None: Option[(Long, Long)]), r.getLong(0))
-        }
-      }.toMap
-    val deltaRanges = deltaStats.view.mapValues(_._1).toMap
+    // tombstone parts must keep ONE delete-key schema until compacted —
+    // anti-joins on mixed column sets do not compose into one broadcast
     appendDeltas.foreach { case (part, delta) =>
-      // monotone-id guard (data parts) — skipped for replace commits,
-      // whose segment is the resolved prior state itself, and for partial
-      // folds, whose segment is the folded suffix of committed segments
+      if (part.endsWith("__tomb") && !replaceParts.contains(part) &&
+          prevParts.get(part).exists(_.nonEmpty) &&
+          hasDataFiles(fs,
+            new org.apache.hadoop.fs.Path(segDir(statePath, part)))) {
+        val prior = readPart(spark, segDir(statePath, part),
+          schemas.get(part)).drop(SegCol).columns.toSet
+        require(prior == delta.columns.toSet,
+          s"$part: tombstone key columns ${delta.columns.toSeq.sorted} " +
+            s"differ from the committed ones ${prior.toSeq.sorted} — " +
+            "compact the state before retracting with a different key " +
+            "shape")
+      }
+    }
+    // each delta is computed once: its segment write observes the row
+    // count (all parts — drives the tombstone-fraction compaction
+    // schedule) and the [min, max] id range (guarded parts — checked
+    // below and committed for later metadata guards and range-pruned
+    // retraction scans)
+    val segName = s"s$batchId"
+    val written: Map[String, SegStats] = appendDeltas.map { case (part, delta) =>
+      part -> writeSegment(spark, statePath, part, segName, delta,
+        partitionCols.getOrElse(part, Seq.empty), idCols.get(part))
+    }.toMap
+    appendDeltas.foreach { case (part, _) =>
+      // monotone-id guard (data parts), checked after the write and before
+      // the publishing rename — skipped for replace commits, whose segment
+      // is the resolved prior state itself, and for partial folds, whose
+      // segment is the folded suffix of committed segments
       if (!replaceParts.contains(part) && !keepPrefix.contains(part))
         idCols.get(part).foreach { idCol =>
           prevParts.get(part).filter(_.nonEmpty).foreach { segs =>
@@ -722,41 +846,29 @@ object IncrementalAgg {
               if (hasDataFiles(fs,
                   new org.apache.hadoop.fs.Path(segDir(statePath, part)))) {
                 val r = readSegments(spark, statePath, part,
-                    Seq(segs.last.name))
+                    schemas.get(part), Seq(segs.last.name))
                   .agg(max(col(idCol).cast("long"))).head
                 if (r.isNullAt(0)) None else Some(r.getLong(0))
               } else None
             }
-            (committedMax, deltaRanges.getOrElse(part, None).map(_._1))
-                match {
-              case (Some(mx), Some(mn)) => require(mx < mn,
-                "delta ids must be strictly greater than every indexed " +
-                  "id (append-only vectors); otherwise the merged index " +
-                  "would contain duplicate neighbor rows")
-              case _ => () // either side empty — nothing can collide
+            // either side empty — nothing can collide
+            val ok = committedMax.forall(mx =>
+              written(part).range.forall { case (mn, _) => mx < mn })
+            if (!ok) written.keys.foreach { p =>
+              fs.delete(new org.apache.hadoop.fs.Path(
+                s"${segDir(statePath, p)}/$SegCol=$segName"), true)
             }
+            require(ok,
+              "delta ids must be strictly greater than every indexed " +
+                "id (append-only vectors); otherwise the merged index " +
+                "would contain duplicate neighbor rows")
           }
         }
-      // tombstone parts must keep ONE delete-key schema until compacted —
-      // anti-joins on mixed column sets do not compose into one broadcast
-      if (part.endsWith("__tomb") && !replaceParts.contains(part) &&
-          prevParts.get(part).exists(_.nonEmpty) &&
-          hasDataFiles(fs,
-            new org.apache.hadoop.fs.Path(segDir(statePath, part)))) {
-        val prior = spark.read.parquet(segDir(statePath, part))
-          .drop(SegCol).columns.toSet
-        require(prior == delta.columns.toSet,
-          s"$part: tombstone key columns ${delta.columns.toSeq.sorted} " +
-            s"differ from the committed ones ${prior.toSeq.sorted} — " +
-            "compact the state before retracting with a different key " +
-            "shape")
-      }
     }
-    val segName = s"s$batchId"
-    val segBytes: Map[String, Long] = appendDeltas.map { case (part, delta) =>
-      part -> writeSegment(spark, statePath, part, segName, delta,
-        partitionCols.getOrElse(part, Seq.empty))
-    }.toMap
+    appendDeltas.foreach { case (part, delta) =>
+      schemas += part ->
+        appendPartSchema(delta.schema, partitionCols.getOrElse(part, Seq.empty))
+    }
     val appendNames = appendDeltas.map(_._1)
     val allParts =
       (prevParts.keys ++ appendNames ++ replaceParts).toSeq.distinct.sorted
@@ -767,12 +879,9 @@ object IncrementalAgg {
           case Some(k) => prevParts.getOrElse(part, Vector.empty).take(k)
           case None => prevParts.getOrElse(part, Vector.empty)
         }
-      part -> (if (appendNames.contains(part))
-                 priorSegs :+ SegMeta(segName,
-                   deltaRanges.getOrElse(part, None),
-                   deltaStats.get(part).map(_._2),
-                   segBytes.get(part))
-               else priorSegs)
+      part -> written.get(part).fold(priorSegs) { st =>
+        priorSegs :+ SegMeta(segName, st.range, Some(st.rows), Some(st.bytes))
+      }
     }
     val tmp = s"$statePath/.tmp-$batchId"
     val tmpPath = new org.apache.hadoop.fs.Path(tmp)
@@ -780,26 +889,35 @@ object IncrementalAgg {
     rewriteDeltas.foreach { case (part, delta) =>
       val merged = prevDir.filter(pd =>
           fs.exists(new org.apache.hadoop.fs.Path(s"$pd/$part"))) match {
-        case Some(pd) =>
-          rewriteMerges(part)(spark.read.parquet(s"$pd/$part"), delta)
+        case Some(pd) => rewriteMerges(part)(
+          readPart(spark, s"$pd/$part", schemas.get(part)), delta)
         case None => delta
       }
       merged.write.mode("overwrite").parquet(s"$tmp/$part")
+      schemas += part -> asRead(merged.schema).asInstanceOf[StructType]
     }
     // carry forward prior rewrite parts this commit does not touch
-    // (small by contract — the version dir holds nothing corpus-sized)
-    prevDir.foreach { pd =>
-      fs.listStatus(new org.apache.hadoop.fs.Path(pd)).foreach { st =>
+    // (small by contract — the version dir holds nothing corpus-sized) as
+    // byte copies: the files are immutable, so no job needs to read them
+    val carried = prevDir.toSeq.flatMap { pd =>
+      fs.listStatus(new org.apache.hadoop.fs.Path(pd)).toSeq.flatMap { st =>
         val name = st.getPath.getName
         if (st.isDirectory && !rewriteDeltas.exists(_._1 == name) &&
             !prevParts.contains(name) && !appendNames.contains(name) &&
-            !replaceParts.contains(name))
-          spark.read.parquet(st.getPath.toString)
-            .write.mode("overwrite").parquet(s"$tmp/$name")
+            !replaceParts.contains(name)) {
+          val to = new org.apache.hadoop.fs.Path(s"$tmp/$name")
+          if (!org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath, fs, to,
+              false, spark.sparkContext.hadoopConfiguration))
+            throw new java.io.IOException(
+              s"carry-forward copy ${st.getPath} -> $to failed")
+          Some(name)
+        } else None
       }
     }
     fs.mkdirs(tmpPath)
     writeManifest(fs, tmp, manifest, idCols)
+    val live = allParts.toSet ++ rewriteDeltas.map(_._1) ++ carried
+    writeSchemas(fs, tmp, schemas.filter { case (p, _) => live.contains(p) })
     requireNoVersionDrift(spark, statePath, prev)
     val dest = new org.apache.hadoop.fs.Path(s"$statePath/v$batchId")
     if (fs.exists(dest)) fs.delete(dest, true)
@@ -815,7 +933,7 @@ object IncrementalAgg {
     // (that is what keeps a reader bound to the previous version alive),
     // and goes the commit after — hygiene only either way: the reader's
     // partition filter already excludes unreferenced segments
-    pruneBehindRetention(spark, statePath, batchId, Some(manifest))
+    pruneBehindRetention(spark, statePath, batchId, retain, Some(manifest))
   }
 
   /** [[appendOnceWithParts]] for the common single-frame append state
@@ -876,7 +994,7 @@ object IncrementalAgg {
       if (data <= 0L) 0.0 else tomb.toDouble / data
     }.getOrElse(0.0)
 
-  private def manifestOf(
+  private[graft] def manifestOf(
       spark: SparkSession, statePath: String): Option[Manifest] =
     latestVersion(spark, statePath).flatMap(v =>
       readManifest(spark, s"$statePath/v$v"))
@@ -1167,7 +1285,7 @@ object IncrementalAgg {
       appendOnceWithParts(spark, statePath, batchId,
         appendDeltas = folds.map { case (part, k) =>
           val names = m.parts(part).drop(k).map(_.name)
-          part -> readSegments(spark, statePath, part, names)
+          part -> readSegments(spark, statePath, part, m.schemas.get(part), names)
         },
         partitionCols = partitionCols,
         keepPrefix = folds.toMap,
@@ -1217,7 +1335,7 @@ object IncrementalAgg {
       case Some((lo, hi)) => segs.filter(_.intersects(lo, hi)).map(_.name)
       case None => segs.map(_.name)
     }
-    val all = spark.read.parquet(segDir(statePath, part))
+    val all = readPart(spark, segDir(statePath, part), m.schemas.get(part))
     val df = (if (chosen.isEmpty) all.filter(lit(false))
               else all.filter(col(SegCol).isin(chosen: _*))).drop(SegCol)
     val tname = tombstonePart(part)
@@ -1229,7 +1347,7 @@ object IncrementalAgg {
     tombLive match {
       case Some(tsegs) =>
         val tomb = readSegments(spark, statePath, tname,
-          tsegs.map(_.name)).distinct()
+          m.schemas.get(tname), tsegs.map(_.name)).distinct()
         // broadcast only when the committed tombstone row counts prove the
         // delete set small — a takedown backlog past the threshold (or any
         // segment predating row counts) anti-joins by shuffle instead of
@@ -1262,10 +1380,11 @@ object IncrementalAgg {
     val v = latestVersion(spark, statePath).getOrElse(
       throw new IllegalStateException(s"no committed state under $statePath"))
     val vdir = s"$statePath/v$v"
-    readManifest(spark, vdir) match {
+    val m = readManifest(spark, vdir)
+    m match {
       case Some(m) if m.parts.contains(part) =>
         resolvePart(spark, statePath, m, part, None)
-      case _ => spark.read.parquet(s"$vdir/$part")
+      case _ => readPart(spark, s"$vdir/$part", m.flatMap(_.schemas.get(part)))
     }
   }
 

@@ -1368,8 +1368,7 @@ object TextQueries {
     //     the replay is hash-comparable, not approximately-equal. ----------
     "d34_incremental_agg" -> ((s, d) => {
       import graft.operators.IncrementalAgg
-      val state = new java.io.File(System.getProperty("java.io.tmpdir"),
-        s"graft_aggstate_${Integer.toHexString(d.hashCode)}").toString
+      val state = s"${Artifacts.dir("aggstate")}/state"
       val docs = Tables.documents(s, d)
         .select(col("doc_id"), col("lang"), col("n_chars"))
       IncrementalAgg.reset(s, state)
