@@ -502,7 +502,6 @@ object IncrementalAgg {
       parts.getOrElse(part, Vector.empty).map(_.name)
   }
 
-  /** The version's manifest, if it was committed by an append commit. */
   private def readText(
       fs: org.apache.hadoop.fs.FileSystem,
       p: org.apache.hadoop.fs.Path): String = {
@@ -522,6 +521,7 @@ object IncrementalAgg {
     finally out.close()
   }
 
+  /** The version's manifest, if it was committed by an append commit. */
   private def readManifest(
       spark: SparkSession, vdir: String): Option[Manifest] = {
     val p = new org.apache.hadoop.fs.Path(s"$vdir/$ManifestFile")
